@@ -204,7 +204,9 @@ object Dedup {
           (col("na") + col("nb") - col("n_common_rare")).cast("double"), 4)
           .as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-    if (maxDocFreq <= graft.plans.DfCappedPairsAgg.MaxSupportedDf) {
+    // a cap below 1 keeps no shingle: the count-then-join shape below
+    // returns no pairs for it, which the bounded aggregate cannot express
+    if (maxDocFreq >= 1 && maxDocFreq <= graft.plans.DfCappedPairsAgg.MaxSupportedDf) {
       // one-pass path: the index has exactly ONE consumer here, so the
       // persistIndex knob has nothing left to cache (it still applies to
       // the fallback shape below, where the index feeds two branches)
@@ -274,8 +276,9 @@ object Dedup {
     // DENOMINATOR still uses full sizes, so capping only lowers n_common —
     // the emitted score is a lower bound and survivors are true positives.
     // Capped configurations use the same one-pass bounded aggregation as
-    // ngramJaccardPairsCapped when the cap is production-sized.
-    if (maxDocFreq <= graft.plans.DfCappedPairsAgg.MaxSupportedDf) {
+    // ngramJaccardPairsCapped when the cap is production-sized; a cap below
+    // 1 keeps no shingle and takes the count-then-join shape (no pairs).
+    if (maxDocFreq >= 1 && maxDocFreq <= graft.plans.DfCappedPairsAgg.MaxSupportedDf) {
       return sh.groupBy(col("sh_h"))
         .agg(graft.plans.DfCappedPairsAgg.dfCappedPairs(
           struct(col("doc_id"), col("n_sh")), maxDocFreq.toInt).as("ps"))

@@ -45,14 +45,16 @@ import org.apache.spark.sql.types._
   * product satisfies |lx·ly| < 10^36 < 2^119 — representable, and its hi
   * word |pHi| < 2^55, so `pHi + carry` never wraps. The 128-bit running
   * sum detects signed overflow with the (a^r)&(b^r) sign trick and latches
-  * a poison flag; a poisoned group evaluates to NULL. Capacity 2^127 ≈
-  * 1.7e38 in scaled units EXCEEDS the decimal path's 38-digit buffer, so
-  * every input the old path summed is summed here with room to spare, and
-  * inputs beyond both capacities return NULL like the decimal path did
-  * (non-ANSI decimal sum overflow → NULL). The one corner where the two
-  * differ: scaled sums in (10^38, 1.7e38] are NULL under decimal but exact
-  * here — strictly more correct, unreachable under the callers' range
-  * guards, and documented in the spec.
+  * a poison flag; a poisoned group evaluates to NULL. Merging two partial
+  * sums adds their high words before the carry (`merge128`), so a partial
+  * whose high word is Long.MaxValue cannot wrap past the latch. Capacity
+  * 2^127 ≈ 1.7e38 in scaled units EXCEEDS the decimal path's 38-digit
+  * buffer, so every input the old path summed is summed here with room to
+  * spare, and inputs beyond both capacities return NULL like the decimal
+  * path did (non-ANSI decimal sum overflow → NULL). The one corner where
+  * the two differ: scaled sums in (10^38, 1.7e38] are NULL under decimal
+  * but exact here — strictly more correct, unreachable under the callers'
+  * range guards, and documented in the spec.
   */
 case class DoubleToScaledLong(child: Expression, scale: Int)
     extends UnaryExpression {
@@ -198,9 +200,10 @@ case class Int128ProductSum(left: Expression, right: Expression, outScale: Int)
   //           = ((aLo & bLo) | ((aLo | bLo) & ~rLo)) >>> 63
   //   rHi   = aHi + (bHi + carry)
   //   sovf  = ((aHi ^ rHi) & ((bHi + carry) ^ rHi)) < 0   (signed overflow)
-  // `bHi + carry` cannot wrap for per-row products (|pHi| < 2^55, file doc);
-  // in merge it could wrap only when bHi = Long.MaxValue, i.e. a partial
-  // already at the 2^127 edge — 10^4 beyond every caller's guarded range.
+  // `bHi + carry` cannot wrap for per-row products (|pHi| < 2^55, file doc).
+  // In merge both high words are partial sums and bHi = Long.MaxValue is
+  // reachable, so merge uses Int128ProductSum.merge128, which adds the high
+  // words first and then the carry.
   private def add128(aHi: Expression, aLo: Expression,
                      bHi: Expression, bLo: Expression): (Expression, Expression, Expression) =
     Int128ProductSum.add128(aHi, aLo, bHi, bLo)
@@ -227,7 +230,7 @@ case class Int128ProductSum(left: Expression, right: Expression, outScale: Int)
   }
 
   override lazy val mergeExpressions: Seq[Expression] = {
-    val (rHi, rLo, sovf) = add128(hi.left, lo.left, hi.right, lo.right)
+    val (rHi, rLo, sovf) = Int128ProductSum.merge128(hi.left, lo.left, hi.right, lo.right)
     Seq(rHi, rLo, Or(seen.left, seen.right),
       Or(Or(ovf.left, ovf.right), sovf))
   }
@@ -305,7 +308,7 @@ case class PairMomentsAgg(left: Expression, right: Expression, scale: Int)
 
   override lazy val mergeExpressions: Seq[Expression] = {
     val steps = accs.map { case (aHi, aLo) =>
-      Int128ProductSum.add128(aHi.left, aLo.left, aHi.right, aLo.right)
+      Int128ProductSum.merge128(aHi.left, aLo.left, aHi.right, aLo.right)
     }
     (Add(n.left, n.right, EvalMode.LEGACY) +:
       steps.flatMap { case (rHi, rLo, _) => Seq(rHi, rLo) }) :+
@@ -335,15 +338,39 @@ object Int128ProductSum {
     */
   private[plans] def add128(aHi: Expression, aLo: Expression,
                             bHi: Expression, bLo: Expression): (Expression, Expression, Expression) = {
-    val rLo = Add(aLo, bLo, EvalMode.LEGACY)
-    val carry = ShiftRightUnsigned(
-      BitwiseOr(BitwiseAnd(aLo, bLo), BitwiseAnd(BitwiseOr(aLo, bLo), BitwiseNot(rLo))),
-      Literal(63))
+    val (rLo, carry) = addLo(aLo, bLo)
     val bHiC = Add(bHi, carry, EvalMode.LEGACY)
     val rHi = Add(aHi, bHiC, EvalMode.LEGACY)
     val sovf = LessThan(
       BitwiseAnd(BitwiseXor(aHi, rHi), BitwiseXor(bHiC, rHi)), Literal(0L))
     (rHi, rLo, sovf)
+  }
+
+  /** [[add128]] for the merge of two partial sums, whose high words may sit
+    * at Long.MaxValue, where add128's `bHi + carry` wraps and the overflow
+    * escapes the poison latch. Adds the high words first, s = aHi + bHi,
+    * then the carry: the sum overflows iff exactly one of the two adds does
+    * — s overflowing, or s = Long.MaxValue with carry 1 — since when both
+    * do (aHi + bHi = Long.MinValue − 1, carry 1) the true sum is exactly
+    * Long.MinValue.
+    */
+  private[plans] def merge128(aHi: Expression, aLo: Expression,
+                              bHi: Expression, bLo: Expression): (Expression, Expression, Expression) = {
+    val (rLo, carry) = addLo(aLo, bLo)
+    val s = Add(aHi, bHi, EvalMode.LEGACY)
+    val rHi = Add(s, carry, EvalMode.LEGACY)
+    val sOvf = LessThan(BitwiseAnd(BitwiseXor(aHi, s), BitwiseXor(bHi, s)), Literal(0L))
+    val carryOvf = And(EqualTo(s, Literal(Long.MaxValue)), EqualTo(carry, Literal(1L)))
+    (rHi, rLo, Not(EqualTo(sOvf, carryOvf)))
+  }
+
+  /** Low-word add: (aLo + bLo wrapped, its unsigned carry-out bit 0 or 1). */
+  private def addLo(aLo: Expression, bLo: Expression): (Expression, Expression) = {
+    val rLo = Add(aLo, bLo, EvalMode.LEGACY)
+    val carry = ShiftRightUnsigned(
+      BitwiseOr(BitwiseAnd(aLo, bLo), BitwiseAnd(BitwiseOr(aLo, bLo), BitwiseNot(rLo))),
+      Literal(63))
+    (rLo, carry)
   }
 }
 

@@ -19,6 +19,19 @@ object Readers {
     * microseconds (integer division — same truncation DuckDB applies), so
     * both engines see identical timestamp values.
     *
+    * Each table is resolved once per session and table version: the first
+    * open infers the parquet schema (a Spark job) and, in local mode, counts
+    * the row groups from the footers; both are cached, and every later open
+    * is `spark.read.schema(cached).parquet(src)` — a file listing, no Spark
+    * job, no footer read, so building a query over opened tables starts no
+    * job. The cache key is (session id, path); an entry holds the leaf-file
+    * signature (name, length, mtime of every non-hidden entry of one
+    * listStatus of `src`) it was resolved from, and an open whose listing
+    * no longer matches it re-infers and replaces the entry. So a rewrite in
+    * place (new length or mtime), an added or a removed part file all
+    * invalidate it, and the map holds one small entry per (session, path).
+    * No DataFrame or plan is cached; sessions never share an entry.
+    *
     * NOTE: sets `spark.sql.legacy.parquet.nanosAsLong` on the session as a
     * side effect — after the first call, plain `spark.read.parquet` on other
     * nanos-timestamp files returns LongType instead of erroring. Scoped
@@ -27,12 +40,55 @@ object Readers {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$dir/$name.parquet"
-    val raw = spark.read.parquet(src)
+    val t = open(spark, src)
+    val raw = spark.read.schema(t.schema).parquet(src)
     val df = raw.schema.fields.find(f => f.name == "ts" && f.dataType == LongType) match {
       case Some(_) => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case None => raw
     }
-    fanOutLocal(spark, df, src, name)
+    t.rowGroups match {
+      case Some(n) => fanOutLocal(spark, df, src, name, t.leaves, n)
+      case None => df
+    }
+  }
+
+  /** A resolved table version: the leaf signature it was resolved from, the
+    * inferred schema, and (local mode only) its parquet row-group count.
+    */
+  private final case class Opened(leaves: Seq[(String, Long, Long)], schema: StructType,
+                                  rowGroups: Option[Int])
+  private val opened =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Opened]()
+
+  /** The cached resolution of `src` for this session, re-inferred when the
+    * leaf signature changed. Inference runs outside any map lock (it is a
+    * Spark job, and `graft.Bench` opens tables from many threads); two
+    * racing first opens each infer once and the later `put` wins.
+    */
+  private def open(spark: SparkSession, src: String): Opened = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new org.apache.hadoop.fs.Path(src)
+    val fs = path.getFileSystem(conf)
+    val root = fs.getFileStatus(path)
+    val entries =
+      if (root.isDirectory)
+        fs.listStatus(path).filter { s =>
+          val n = s.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        }.sortBy(_.getPath.getName).toSeq
+      else Seq(root)
+    val leaves = entries.map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+    val key = (graft.Sessions.id(spark), src)
+    Option(opened.get(key)).filter(_.leaves == leaves).getOrElse {
+      val inferred = spark.read.parquet(src)
+      val rowGroups =
+        if (!spark.sparkContext.isLocal) None
+        else Some(rowGroupCount(conf, entries.filter(_.isFile))
+          .getOrElse(inferred.rdd.getNumPartitions))
+      val fresh = Opened(leaves, inferred.schema, rowGroups)
+      opened.put(key, fresh)
+      fresh
+    }
   }
 
   /** Local-mode-only leaf fan-out. The local testdata tables are one parquet
@@ -44,22 +100,23 @@ object Readers {
     * leaf parallelism comes from file splits.
     *
     * The fan-out therefore reproduces the cluster layout rather than patching
-    * the plan: the table is rewritten ONCE per (source file, core count) into
-    * a `cores`-file parquet copy under java.io.tmpdir, and every query scans
-    * the copy. A per-query `repartition(cores)` would instead inject a
+    * the plan: the table is rewritten ONCE per (table version, core count)
+    * into a `cores`-file parquet copy under java.io.tmpdir, and every query
+    * scans the copy. A per-query `repartition(cores)` would instead inject a
     * round-robin Exchange above every scan — full scan output shuffled BEFORE
     * any partial aggregation can collapse it (measured: q02 0.5 s → 2.4 s) —
     * and that Exchange is exactly the shape a 1000-executor plan must not
     * have. With the multi-file copy, leaf parallelism comes from file splits
     * as on a real cluster, pushdown/pruning hit the scan unchanged, and
-    * map-side combine stays below the first shuffle. Gated to local masters;
-    * a no-op whenever the source already holds at least half the session's
-    * cores in ROW GROUPS (read from the parquet footers — the true
-    * splittability bound; planned byte-range splits over-report it for a
-    * large single-row-group file, where only the range containing the row
-    * group yields rows and every other task is a no-op, which is exactly the
-    * pathology being gated against). Any footer-read or cache-build failure
-    * falls back to the untouched scan.
+    * map-side combine stays below the first shuffle. A no-op whenever the
+    * source already holds at least half the session's cores in ROW GROUPS
+    * (`rowGroups`, read from the parquet footers at the table's first open —
+    * the true splittability bound; planned byte-range splits over-report it
+    * for a large single-row-group file, where only the range containing the
+    * row group yields rows and every other task is a no-op, which is exactly
+    * the pathology being gated against). Any cache-build failure falls back
+    * to the untouched scan. The copy is read with `df`'s schema, so reading
+    * it runs no inference job either.
     *
     * NOTE: taking the copy path sets `spark.sql.files.openCostInBytes` on
     * the session as a side effect (see inline comment) — like table()'s
@@ -68,45 +125,30 @@ object Readers {
     * reads in the same local session: a many-small-files dataset plans one
     * file per split instead of bin-packing — more tasks, same results.
     */
-  private def fanOutLocal(spark: SparkSession, df: DataFrame, src: String,
-                          name: String): DataFrame = {
-    if (!spark.sparkContext.isLocal) df
+  private def fanOutLocal(spark: SparkSession, df: DataFrame, src: String, name: String,
+                          leaves: Seq[(String, Long, Long)], rowGroups: Int): DataFrame = {
+    val cores = spark.sparkContext.defaultParallelism
+    if (rowGroups * 2 >= cores) df
     else {
-      val cores = spark.sparkContext.defaultParallelism
-      val splittable = rowGroupCount(spark, src)
-        .getOrElse(df.rdd.getNumPartitions)
-      if (splittable * 2 >= cores) df
-      else {
-        // One file per split when reading the copy: the default 4 MiB
-        // openCostInBytes bin-packs the copy's small files back into ~2
-        // splits, silently undoing the fan-out. openCost = maxPartitionBytes
-        // closes every pack after one file. Local-only (like the copy
-        // itself); on a cluster the defaults are the right economics.
-        spark.conf.set("spark.sql.files.openCostInBytes",
-          spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        try spark.read.parquet(fanOutCopy(spark, df, src, name, cores))
-        catch { case scala.util.control.NonFatal(_) => df }
-      }
+      // One file per split when reading the copy: the default 4 MiB
+      // openCostInBytes bin-packs the copy's small files back into ~2
+      // splits, silently undoing the fan-out. openCost = maxPartitionBytes
+      // closes every pack after one file. Local-only (like the copy
+      // itself); on a cluster the defaults are the right economics.
+      spark.conf.set("spark.sql.files.openCostInBytes",
+        spark.conf.get("spark.sql.files.maxPartitionBytes"))
+      try spark.read.schema(df.schema).parquet(fanOutCopy(df, src, name, leaves, cores))
+      catch { case scala.util.control.NonFatal(_) => df }
     }
   }
 
-  /** Total parquet row groups across `src` (a file or a directory of part
-    * files) — footer reads only, no data scan. None on any failure; the
-    * caller then falls back to the planned-split count.
+  /** Total parquet row groups across the leaf part files — footer reads
+    * only, no data scan. None on any failure; the caller then falls back to
+    * the planned-split count.
     */
-  private def rowGroupCount(spark: SparkSession, src: String): Option[Int] =
+  private def rowGroupCount(conf: org.apache.hadoop.conf.Configuration,
+                            files: Seq[org.apache.hadoop.fs.FileStatus]): Option[Int] =
     scala.util.Try {
-      val conf = spark.sessionState.newHadoopConf()
-      val path = new org.apache.hadoop.fs.Path(src)
-      val fs = path.getFileSystem(conf)
-      val root = fs.getFileStatus(path)
-      val files =
-        if (root.isDirectory)
-          fs.listStatus(path).filter { s =>
-            val n = s.getPath.getName
-            s.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-        else Array(root)
       files.map { s =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -115,19 +157,22 @@ object Readers {
     }.toOption
 
   /** Build (once) and return the `cores`-file copy of `df` for source `src`.
-    * Key includes source length+mtime (stale copies of regenerated testdata
-    * are never reused) and the core count (an 8-way copy would defeat the
-    * fan-out for a 32-core session). Thread-safe within a JVM via a per-key
-    * build lock (bench warms 16 queries concurrently); safe across JVMs via
+    * Key includes a digest of the path and its leaf signature (the same one
+    * the open cache checks: a part file rewritten in place, added or removed
+    * gives a new key, so a stale copy of regenerated testdata is never
+    * reused) and the core count (an 8-way copy would defeat the fan-out for
+    * a 32-core session). Thread-safe within a JVM via a per-key build lock
+    * (bench warms 16 queries concurrently); safe across JVMs via
     * write-to-temp + atomic rename, first writer wins and losers read the
     * winner's copy. The copy carries the ts rewrite, so reads need no
     * nanosAsLong handling.
     */
   private val fanOutLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def fanOutCopy(spark: SparkSession, df: DataFrame, src: String,
-                         name: String, cores: Int): String = {
-    val f = new java.io.File(src)
-    val key = s"$name-${f.length}-${f.lastModified}-p$cores"
+  private def fanOutCopy(df: DataFrame, src: String, name: String,
+                         leaves: Seq[(String, Long, Long)], cores: Int): String = {
+    val version = java.util.UUID.nameUUIDFromBytes(
+      (src +: leaves.map(_.toString)).mkString("\n").getBytes("UTF-8"))
+    val key = s"$name-$version-p$cores"
     val dest = new java.io.File(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft-scan-cache"), key)
     val lock = fanOutLocks.computeIfAbsent(key, _ => new Object)

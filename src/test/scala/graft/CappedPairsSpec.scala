@@ -140,4 +140,19 @@ class CappedPairsSpec extends AnyFunSuite {
     assert(onePass.exists { case (a, b, c) => a == 1L && b == 2L && c == 1.0 },
       "the quoted subset must score containment 1.0")
   }
+
+  test("a df cap below 1 keeps no shingle: both capped variants return no pairs") {
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"))
+      .toDF("doc_id", "text")
+    val Dedup = graft.operators.Dedup
+    for (cap <- Seq(0L, -1L)) {
+      val jaccard = Dedup.ngramJaccardPairsCapped(docs, $"doc_id", $"text", 3, 0.0, maxDocFreq = cap)
+      val containment = Dedup.ngramContainmentPairs(docs, $"doc_id", $"text", 3, 0.0, maxDocFreq = cap)
+      assert(jaccard.isEmpty && containment.isEmpty, s"cap $cap emitted pairs")
+      assert(jaccard.columns.toSeq == Seq("doc_a", "doc_b", "jaccard"))
+      assert(containment.columns.toSeq == Seq("doc_a", "doc_b", "containment"))
+    }
+    // the same documents pair at any cap that keeps their shingles
+    assert(!Dedup.ngramJaccardPairsCapped(docs, $"doc_id", $"text", 3, 0.0, maxDocFreq = 2L).isEmpty)
+  }
 }

@@ -121,6 +121,74 @@ class ExactSum128Spec extends AnyFunSuite {
     assert(got(0).isNullAt(3), "overflowed moments must yield NULL corr")
   }
 
+  /** Merges two aggregation buffers of `agg` with its merge expressions,
+    * interpreted and through generated code; returns both output rows.
+    */
+  private def merged(agg: org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate,
+                     left: Seq[Any], right: Seq[Any]): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    val bound = agg.mergeExpressions.map(
+      BindReferences.bindReference(_, agg.aggBufferAttributes ++ agg.inputAggBufferAttributes))
+    val row = InternalRow.fromSeq(left ++ right)
+    Seq(InternalRow.fromSeq(bound.map(_.eval(row))), GenerateUnsafeProjection.generate(bound)(row))
+  }
+
+  test("merging partials at the 2^127 edge: a carry into Long.MaxValue poisons, in-range carries do not") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    // low words -1 and 1 sum to 0 and carry 1 into the high word
+    // (aHi, bHi, the high word the merge must give, overflow)
+    val cases = Seq(
+      (0L, Long.MaxValue, None, true),
+      (-1L, Long.MaxValue, Some(Long.MaxValue), false),
+      (Long.MinValue, -1L, Some(Long.MinValue), false))
+    val sum = graft.plans.Int128ProductSum(Literal(1L), Literal(1L), 0)
+    val moments = graft.plans.PairMomentsAgg(Literal(1L), Literal(1L), 0)
+    for ((aHi, bHi, hi, overflow) <- cases) {
+      // Int128ProductSum buffer: (hi, lo, seen, ovf)
+      merged(sum, Seq(aHi, -1L, true, false), Seq(bHi, 1L, true, false)).foreach { r =>
+        assert(r.getBoolean(3) == overflow, s"sum ($aHi, $bHi): ovf")
+        hi.foreach(h => assert(r.getLong(0) == h, s"sum ($aHi, $bHi): hi"))
+      }
+      // PairMomentsAgg buffer: (n, sxHi, sxLo, 4 more (hi, lo) pairs, ovf)
+      def buf(sxHi: Long, sxLo: Long) = Seq[Any](1L, sxHi, sxLo) ++ Seq.fill(8)(0L) :+ false
+      merged(moments, buf(aHi, -1L), buf(bHi, 1L)).foreach { r =>
+        assert(r.getBoolean(11) == overflow, s"moments ($aHi, $bHi): ovf")
+        hi.foreach(h => assert(r.getLong(1) == h, s"moments ($aHi, $bHi): sx hi"))
+      }
+    }
+  }
+
+  test("q02 and q18 keep their exact-sum aggregates inside whole-stage codegen") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    // (aggregates inside codegen, aggregates outside it)
+    def exactAggs(p: SparkPlan, inCodegen: Boolean): (Int, Int) = {
+      val (children, nested) = p match {
+        case a: AdaptiveSparkPlanExec => (Seq(a.executedPlan), false)
+        case s: QueryStageExec => (Seq(s.plan), false)
+        case w: WholeStageCodegenExec => (Seq(w.child), true)
+        case i: InputAdapter => (Seq(i.child), false)
+        case other => (other.children, inCodegen)
+      }
+      val here = p match {
+        case h: HashAggregateExec if h.toString.contains("graft_int128_product_sum") =>
+          if (inCodegen) (1, 0) else (0, 1)
+        case _ => (0, 0)
+      }
+      children.map(exactAggs(_, nested)).foldLeft(here) { case ((a, b), (c, d)) => (a + c, b + d) }
+    }
+    for (name <- Seq("q02_group_agg", "q18_revenue_join")) {
+      val df = SparkEntry.queries(name)(spark, SparkTestBase.Sf)
+      df.collect()
+      val (inside, outside) = exactAggs(df.queryExecution.executedPlan, inCodegen = false)
+      assert(inside > 0 && outside == 0,
+        s"$name: $inside exact-sum aggregates in codegen, $outside outside\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("out-of-range values fail loudly instead of silently vanishing from the sum") {
     val df = Seq(1.0, 1.0e17).toDF("x")
     val e = intercept[Exception] {

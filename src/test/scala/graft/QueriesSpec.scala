@@ -45,6 +45,18 @@ class QueriesSpec extends GraftSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("once their tables are open, the etl builders start no Spark job while building") {
+    // a query is a plan: building it must not run work on the driver. The
+    // first build opens the tables (schema inference is a job); every later
+    // build only lists files.
+    val names = Seq("q02_group_agg", "q09_nearby_selfjoin", "q13_running_window",
+      "q15_asof_join", "q18_revenue_join")
+    names.foreach(SparkEntry.queries(_)(spark, sf))
+    val eager = names.map(n => n -> jobsStartedBy(SparkEntry.queries(n)(spark, sf))._2)
+      .filter(_._2 > 0)
+    assert(eager.isEmpty, s"builders that started Spark jobs: $eager")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

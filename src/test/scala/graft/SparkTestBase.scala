@@ -53,6 +53,32 @@ abstract class GraftSuite extends AnyFunSuite {
     assume(present, s"$gateName corpus not generated; $genHint ($requiredFile)")
   }
 
+  /** `body`'s result and the number of Spark jobs it started from this
+    * thread. The jobs are told apart by a job group unique to the call, and
+    * counted once the listener bus has delivered every event, so a zero is a
+    * real zero.
+    */
+  def jobsStartedBy[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-started-by-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    val result =
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerBusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (result, n.get)
+  }
+
   /** Shared assertion for first-occurrence dedup results: exactly one
     * `is_first` row per distinct content, and it is the min-id row.
     * (Used by ScaleOpsSpec and PropertySpec — one contract, one place.)
