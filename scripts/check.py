@@ -1,77 +1,29 @@
 #!/usr/bin/env python3
 """Dev-only driver mimic: compare Verify parquet dumps against the DuckDB
-oracle (like the round harness does). Not part of the shipped library.
+oracle (like the round harness does), one `check_one.compare` per oracle
+query. Not part of the shipped library.
 
 Usage: python3 scripts/check.py [sfDir] [outDir]
 """
 import json
 import sys
 
-import duckdb
-import pandas as pd
+from check_one import compare, connect
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-
+con = connect(SF_DIR)
 oracle = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
 
 ok, bad = [], []
 for name in sorted(oracle):
     try:
-        want = con.execute(oracle[name]).df()
-        got = con.execute(
-            f"SELECT * FROM read_parquet('{OUT_DIR}/{name}/*.parquet')").df()
-        w, g = canon(want), canon(got)
-        if list(w.columns) != list(g.columns):
-            bad.append((name, f"columns {list(g.columns)} != {list(w.columns)}"))
-            continue
-        if len(w) != len(g):
-            bad.append((name, f"rows {len(g)} != {len(w)}"))
-            continue
-        diffs = []
-        for c in w.columns:
-            wv, gv = w[c], g[c]
-            if str(wv.dtype) != str(gv.dtype):
-                diffs.append(f"dtype[{c}]: got {gv.dtype} want {wv.dtype}")
-            try:
-                eq = (wv.fillna("~N") == gv.fillna("~N")) if wv.dtype == object else \
-                     ((wv == gv) | (wv.isna() & gv.isna()))
-            except Exception:
-                eq = wv.astype(str) == gv.astype(str)
-            n_bad = int((~eq).sum())
-            if n_bad:
-                i = (~eq).idxmax()
-                diffs.append(f"values[{c}]: {n_bad} mismatches, first idx {i}: got {gv[i]!r} want {wv[i]!r}")
-        if not diffs:
-            # strict pass in DuckDB itself: pandas folds SQL NULL and float
-            # NaN both to NaN, so the per-column check above cannot see a
-            # NULL-vs-NaN divergence; EXCEPT ALL distinguishes them (NULL
-            # and NaN are distinct values under DuckDB set semantics)
-            cols = ", ".join(f'"{c}"' for c in sorted(w.columns))
-            n_diff = con.execute(
-                f"WITH want_v AS ({oracle[name]}), "
-                f"got_v AS (SELECT * FROM read_parquet('{OUT_DIR}/{name}/*.parquet')) "
-                f"SELECT count(*) FROM ("
-                f" (SELECT {cols} FROM want_v EXCEPT ALL SELECT {cols} FROM got_v)"
-                f" UNION ALL "
-                f" (SELECT {cols} FROM got_v EXCEPT ALL SELECT {cols} FROM want_v))"
-            ).fetchone()[0]
-            if n_diff:
-                diffs.append(f"strict NULL/NaN-aware compare: {n_diff} differing rows")
+        n, diffs = compare(con, oracle[name], f"{OUT_DIR}/{name}")
         if diffs:
             bad.append((name, "; ".join(diffs)))
         else:
-            ok.append((name, len(w)))
+            ok.append((name, n))
     except Exception as e:
         bad.append((name, f"EXCEPTION {type(e).__name__}: {e}"))
 

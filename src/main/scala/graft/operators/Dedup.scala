@@ -615,6 +615,24 @@ object Dedup {
     if (persistIndex) materializeAndRelease(result, bi) else result
   }
 
+  /** Drop every row whose `key` bucket holds more than `cap` rows — the
+    * quadratic-blowup guard of the banding family; NULL keys form one bucket
+    * like any other (spec-pinned). `count() OVER (PARTITION BY key)` rides
+    * the downstream self-join's own key exchange — zero extra shuffles —
+    * but WindowExec BUFFERS each partition, so the one adversarial bucket
+    * the cap exists to drop becomes a single (linear, disk-backed) spilled
+    * straggler task before the filter sees it. The two-level alternative
+    * (per-key hash-aggregate counts anti-joined back) never buffers a
+    * bucket but pays an extra aggregate exchange; it lost to this form at
+    * every sf10 shape measured, the ~60,500-row adversarial bucket
+    * included (SURVEY §5, bucket-cap formulations).
+    */
+  private[graft] def dropOverCapBuckets(df: DataFrame, key: Column, cap: Long): DataFrame =
+    df.withColumn("_bkn",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(key)))
+      .filter(col("_bkn") <= cap)
+      .drop("_bkn")
+
   /** MinHash+LSH candidate pairs: signature → bands → join docs sharing a
     * band bucket → estimate Jaccard as signature agreement. The band bucket
     * is the blocking key; numPerms/rowsPerBand tune recall vs fan-out.
@@ -624,45 +642,6 @@ object Dedup {
     * an earlier agg+join formulation needed one, which is why persistIndex
     * exists as a separate knob).
     */
-  /** Drop every row whose `key` bucket holds more than `cap` rows — the
-    * quadratic-blowup guard of the banding family, in its two
-    * result-identical formulations (spec-asserted equal; judge r10 #4):
-    *
-    *  - `twoLevel = false`: `count() OVER (PARTITION BY key)` riding the
-    *    downstream self-join's own key exchange — zero extra shuffles — but
-    *    WindowExec BUFFERS each partition, so the one adversarial bucket
-    *    the cap exists to drop becomes a single (linear, disk-backed)
-    *    spilled straggler task before the filter sees it.
-    *  - `twoLevel = true`: hash-aggregate counts per key (map-side partial
-    *    combine — no task ever buffers a bucket; the shuffled rows are
-    *    (key, partial_count), one per key per map task), keep only the
-    *    over-cap keys (≤ rows/cap of them by construction — bounded even
-    *    adversarially), LEFT ANTI join them back on the same key
-    *    partitioning. One extra count-sized aggregate exchange; AQE
-    *    broadcasts the anti side at any realistic over-cap count.
-    *
-    * Crossover (measured at sf10, §5): the window form wins while the
-    * largest bucket fits one task's memory; the two-level form wins once
-    * it doesn't. Callers pick per their corpus posture.
-    */
-  private[graft] def dropOverCapBuckets(df: DataFrame, key: Column, cap: Long,
-                                        twoLevel: Boolean): DataFrame =
-    if (!twoLevel)
-      df.withColumn("_bkn",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(key)))
-        .filter(col("_bkn") <= cap)
-        .drop("_bkn")
-    else {
-      val over = df.groupBy(key.as("_ck")).agg(count(lit(1)).as("_ckn"))
-        .filter(col("_ckn") > cap)
-        .select(col("_ck"))
-      // null-SAFE equality: groupBy puts NULL keys in one (cappable) bucket
-      // exactly like the window's partitionBy, but `===` never matches NULL
-      // — a plain anti join would silently exempt the NULL bucket from the
-      // cap, diverging from the window form (spec-pinned)
-      df.join(over, key <=> col("_ck"), "left_anti")
-    }
-
   def minhashLshPairs(docs: DataFrame, id: Column, text: Column,
                       shingleN: Int, numPerms: Int, rowsPerBand: Int,
                       minEstJaccard: Double,
@@ -695,15 +674,10 @@ object Dedup {
     // Without an explicit persist, the two join sides are identical
     // subplans up to the `bk` exchange, which Spark's exchange reuse
     // materializes once — the whole operator is ONE job with ONE scan of
-    // the corpus. The two-level anti-join form (dropOverCapBuckets,
-    // twoLevel = true) removes the window's single-task buffering of the
-    // adversarial bucket at the cost of one aggregate exchange — measured
-    // at sf10 (max bucket 60,500; §5): the window form still wins at this
-    // scale, so it stays the operator default; flip the helper's knob when
-    // the largest expected bucket exceeds one task's spill comfort.
+    // the corpus (dropOverCapBuckets has the window's buffering trade-off).
     val banded0 =
       if (!capped) bandedRaw
-      else dropOverCapBuckets(bandedRaw, col("bk"), maxBucketSize, twoLevel = false)
+      else dropOverCapBuckets(bandedRaw, col("bk"), maxBucketSize)
     val banded = if (persistIndex) banded0.persist() else banded0
     // score BEFORE the pair dedup: a pair sharing several band buckets has
     // the identical estimate in each, so results are unchanged, and the
@@ -829,7 +803,7 @@ object Dedup {
         explode(HashFns.bandKeys(col("_bsig"), numPerms, rowsPerBand)).as("bk"))
     val idx =
       if (maxBucket == Long.MaxValue) bandSigIndex
-      else dropOverCapBuckets(bandSigIndex, col("bk"), maxBucket, twoLevel = false)
+      else dropOverCapBuckets(bandSigIndex, col("bk"), maxBucket)
     banded.join(idx, "bk")
       .select(col("batch_id"), col("corpus_id"),
         graft.functions.NumFns.roundHalfUp(
@@ -1493,9 +1467,8 @@ object Dedup {
     // one task, so one boilerplate gram in 10⁷ docs becomes a spilled
     // straggler — the same hazard dropOverCapBuckets documents. The agg
     // partials combine map-side; both the agg and the join need the gh
-    // partitioning, so exchange reuse materializes the gram exchange once
-    // (the dropOverCapBuckets shape), and the SMJ's buffered side has one
-    // row per key.
+    // partitioning, so exchange reuse materializes the gram exchange once,
+    // and the SMJ's buffered side has one row per key.
     val dfs = grams.groupBy(col("gh"))
       .agg((count(lit(1)) > 1L).as("shared"))
     val withDf = grams.join(dfs, Seq("gh"))

@@ -157,32 +157,42 @@ object Readers {
     }.toOption
 
   /** Build (once) and return the `cores`-file copy of `df` for source `src`.
-    * Key includes a digest of the path and its leaf signature (the same one
-    * the open cache checks: a part file rewritten in place, added or removed
-    * gives a new key, so a stale copy of regenerated testdata is never
-    * reused) and the core count (an 8-way copy would defeat the fan-out for
-    * a 32-core session). Thread-safe within a JVM via a per-key build lock
+    * The copy's name is `<name>-<path digest>-<version digest>-p<cores>`:
+    * the version digest covers the leaf signature (the same one the open
+    * cache checks: a part file rewritten in place, added or removed gives a
+    * new name, so a stale copy of regenerated testdata is never reused) and
+    * the core count keeps an 8-way copy from defeating the fan-out for a
+    * 32-core session. Thread-safe within a JVM via a per-key build lock
     * (bench warms 16 queries concurrently); safe across JVMs via
     * write-to-temp + atomic rename, first writer wins and losers read the
-    * winner's copy. The copy carries the ts rewrite, so reads need no
-    * nanosAsLong handling.
+    * winner's copy. The writer whose rename lands then deletes the completed
+    * copies of the same path and core count that the new one supersedes, so
+    * the cache holds one copy per (path, core count). The copy carries the ts
+    * rewrite, so reads need no nanosAsLong handling.
     */
   private val fanOutLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def fanOutCopy(df: DataFrame, src: String, name: String,
                          leaves: Seq[(String, Long, Long)], cores: Int): String = {
-    val version = java.util.UUID.nameUUIDFromBytes(
-      (src +: leaves.map(_.toString)).mkString("\n").getBytes("UTF-8"))
-    val key = s"$name-$version-p$cores"
-    val dest = new java.io.File(
-      new java.io.File(System.getProperty("java.io.tmpdir"), "graft-scan-cache"), key)
+    def digest(s: String) = java.util.UUID.nameUUIDFromBytes(s.getBytes("UTF-8"))
+    val prefix = s"$name-${digest(src)}-"
+    val suffix = s"-p$cores"
+    val key = prefix + digest(leaves.mkString("\n")) + suffix
+    val cache = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-scan-cache")
+    val dest = new java.io.File(cache, key)
     val lock = fanOutLocks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
       if (!new java.io.File(dest, "_SUCCESS").isFile) {
-        val tmp = new java.io.File(dest.getParentFile, s"$key.tmp-${ProcessHandle.current.pid}")
+        val tmp = new java.io.File(cache, s"$key.tmp-${ProcessHandle.current.pid}")
         df.repartition(cores).write.mode("overwrite").parquet(tmp.getPath)
-        try java.nio.file.Files.move(tmp.toPath, dest.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { // another JVM built it between our check and move: use theirs
+        try {
+          java.nio.file.Files.move(tmp.toPath, dest.toPath,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          Option(cache.listFiles()).toSeq.flatten.filter { old =>
+            val n = old.getName
+            n != key && n.startsWith(prefix) && n.endsWith(suffix) &&
+              new java.io.File(old, "_SUCCESS").isFile
+          }.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+        } catch { // another JVM built it between our check and move: use theirs
           case _: java.nio.file.FileSystemException =>
             org.apache.commons.io.FileUtils.deleteDirectory(tmp)
         }

@@ -208,25 +208,19 @@ class OperatorsSpec extends GraftSuite {
     assert(got.toSeq == Seq((1L, 2L, 1.0)))
   }
 
-  test("Dedup.dropOverCapBuckets: window and two-level forms are row-identical") {
+  test("Dedup.dropOverCapBuckets drops every over-cap bucket, the NULL bucket included") {
     // buckets of size 1, 3 (== cap), and 5 (over cap, must drop whole);
-    // NULL keys form their own bucket in BOTH forms (window partitions
-    // group NULLs; the anti-join must not let them slip through via
-    // null-key join semantics) — so cap 3 drops the 5-bucket AND the
-    // 4-wide NULL bucket
+    // NULL keys form their own bucket (window partitions group NULLs) — so
+    // cap 3 drops the 5-bucket AND the 4-wide NULL bucket
     val rows = Seq(
       (1L, "solo"), (2L, "trio"), (3L, "trio"), (4L, "trio"),
       (10L, "five"), (11L, "five"), (12L, "five"), (13L, "five"), (14L, "five"),
       (20L, null), (21L, null), (22L, null), (23L, null))
       .toDF("id", "bk")
-    def got(twoLevel: Boolean): Set[(Long, String)] =
-      Dedup.dropOverCapBuckets(rows, $"bk", 3L, twoLevel)
-        .as[(Long, Option[String])].collect()
-        .map { case (i, b) => (i, b.orNull) }.toSet
-    val win = got(twoLevel = false)
-    val two = got(twoLevel = true)
-    assert(win == Set((1L, "solo"), (2L, "trio"), (3L, "trio"), (4L, "trio")))
-    assert(two == win, s"formulations diverge: window=$win twoLevel=$two")
+    val got = Dedup.dropOverCapBuckets(rows, $"bk", 3L)
+      .as[(Long, Option[String])].collect()
+      .map { case (i, b) => (i, b.orNull) }.toSet
+    assert(got == Set((1L, "solo"), (2L, "trio"), (3L, "trio"), (4L, "trio")))
   }
 
   test("Dedup.simhashPairs: identical docs at hamming 0") {

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
-/** r15 measurement harness (guide §1): ProfileR14 plus (a) the SF dir from
-  * `SPARK_GRAFT_SF_DIR` (the r14 judge's #2: sf0.1 is overhead-dominated —
-  * profile at sf1), and (b) per-job shuffle read/write bytes from task
-  * metrics, so "shuffle fewer bytes" changes (§2.3) have a before/after
-  * number and skew claims can cite max-vs-sum task shuffle volumes.
+/** Per-query measurement harness: per query and rep, the wall time, each
+  * Spark job's wall time and inter-job driver gap (wall minus job sum =
+  * driver/planning time), and per-job input and shuffle read/write bytes
+  * from task metrics with the largest per-task shuffle read, so "shuffle
+  * fewer bytes" changes have a before/after number and skew claims can cite
+  * max-vs-sum task shuffle volumes. The SF dir comes from
+  * `SPARK_GRAFT_SF_DIR`: sf0.1 is overhead-dominated, so profile at sf1.
   * Run: `SPARK_GRAFT_SF_DIR=/tmp/sf1 sbt "Test/runMain graft.ProfileR15 q52_dedup_jaccard_capped 3"`.
   */
 object ProfileR15 {

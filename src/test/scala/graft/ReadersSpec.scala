@@ -120,17 +120,24 @@ class ReadersSpec extends GraftSuite {
     val t = tableDir().resolve("t.parquet")
     Files.createDirectories(t)
     val part = t.resolve("part-0.parquet")
-    def ids(): Seq[Long] = {
+    def table(): DataFrame = {
       val df = Readers.table(spark, t.getParent.toString, "t")
       assert(df.inputFiles.forall(_.contains("graft-scan-cache")), "fan-out copy not taken")
-      df.collect().map(_.getLong(0)).toSeq.sorted
+      df
     }
+    def ids(): Seq[Long] = table().collect().map(_.getLong(0)).toSeq.sorted
     Files.write(part, partBytes(spark.range(10).toDF("a")))
     assert(ids() == (0L until 10L))
     // same file, same directory entry: the directory's own length and mtime
     // do not change, only the part file's
     Files.write(part, partBytes(spark.range(100, 130).toDF("a")))
     assert(ids() == (100L until 130L))
+    // building the new version's copy deleted the one it superseded: one
+    // copy (named <table>-<path digest>-<version digest>-p<cores>) remains
+    val copy = new java.io.File(new java.net.URI(table().inputFiles.head)).getParentFile
+    val pathPrefix = s"t-${java.util.UUID.nameUUIDFromBytes(t.toString.getBytes("UTF-8"))}-"
+    val copies = copy.getParentFile.list().filter(_.startsWith(pathPrefix)).toSeq
+    assert(copies == Seq(copy.getName), s"copies of the table: $copies")
   }
 
   test("two sessions never share an entry") {
