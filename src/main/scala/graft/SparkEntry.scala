@@ -1273,19 +1273,14 @@ object SparkEntry {
       // quality-weighted subsampling: keep 5 docs per source, favoring long
       // documents via a deterministic hash-priority (h / n_chars — a bigger
       // doc gets a smaller priority, ranking earlier; no RNG, so reruns and
-      // engines agree). `source` has a handful of values, so the SALTED
-      // top-N runs here: a plain per-source window would sort corpus/6 rows
-      // in one partition at 100 TB; the salted prune bounds the final sort
-      // to 64·5 rows per source with an identical result (spec-asserted).
-      // doc_id is reduced mod a prime before the Knuth multiplier (overflow
-      // headroom, see q43).
+      // engines agree). doc_id is reduced mod a prime before the Knuth
+      // multiplier (overflow headroom, see q43).
       val h = pmod(pmod(col("doc_id"), lit(100003L)) * lit(2654435761L), lit(1000003L))
-      Relational.topNPerGroupSalted(
+      Relational.topNPerGroup(
           T(s, dir, "documents")
             .select(col("doc_id"), col("source"), col("n_chars"),
               (h.cast("double") / col("n_chars").cast("double")).as("priority")),
-          Seq(col("source")), Seq(col("priority"), col("doc_id")), 5,
-          saltBy = col("doc_id"))
+          Seq(col("source")), Seq(col("priority"), col("doc_id")), 5)
         .select(col("source"), col("doc_id"), col("n_chars"), col("rn"))
         .orderBy("source", "rn")
     }, oracle = Some(
@@ -1322,9 +1317,7 @@ object SparkEntry {
       // engines agree exactly): term counts per (source, token); the "IDF"
       // cut keeps terms absent from at least one source (source_df below
       // the total source count — a broadcast 1-row threshold, computed not
-      // hard-coded); top-5 per source. Per-source vocab is unbounded at
-      // corpus scale while source count is small ⇒ the SALTED top-N bounds
-      // the final sort.
+      // hard-coded); top-5 per source.
       val tf = T(s, dir, "documents")
         .select(col("source"), explode(TextFns.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
@@ -1333,12 +1326,11 @@ object SparkEntry {
       val df = tf.groupBy(col("token")).agg(count(lit(1)).as("source_df"))
       val nSrc = tf.select(col("source")).distinct()
         .agg(count(lit(1)).as("n_src"))
-      Relational.topNPerGroupSalted(
+      Relational.topNPerGroup(
           tf.join(df, Seq("token"))
             .join(broadcast(nSrc), col("source_df") < col("n_src"))
             .drop("n_src"),
-          Seq(col("source")), Seq(col("tf").desc, col("token")), 5,
-          saltBy = xxhash64(col("token")))
+          Seq(col("source")), Seq(col("tf").desc, col("token")), 5)
         .select(col("source"), col("token"), col("tf"), col("source_df"), col("rn"))
         .orderBy("source", "rn")
     }, oracle = Some(
@@ -1512,7 +1504,7 @@ object SparkEntry {
       // key every vector to bucket 0, so the single band table holds the
       // whole corpus and the bucket join scores every (query, neighbor)
       // pair — brute force through the LSH plumbing (bucketing expression,
-      // band explode, bucket join, pair dedup, salted top-k), hash-checked
+      // band explode, bucket join, pair dedup, per-query top-k), hash-checked
       // by the driver against q26's oracle. Completes the exact-twin ladder
       // (q66 PQ / q67 IVF / q68 IVFPQ / q69 LSH). No corpus-size
       // precondition: nothing in this path truncates — the degenerate

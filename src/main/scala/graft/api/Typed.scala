@@ -307,7 +307,7 @@ object Typed {
   }
 
   /** Exact cosine top-k neighbors, typed
-    * ([[graft.operators.Similarity.bruteForceTopK]] — the salted two-phase
+    * ([[graft.operators.Similarity.bruteForceTopK]] — one per-query
     * ranking; the corpus is never collected, queries broadcast).
     */
   def annTopK(corpus: Dataset[Embedding], queries: Dataset[Embedding],

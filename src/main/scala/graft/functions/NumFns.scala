@@ -39,8 +39,10 @@ object NumFns {
     * 128-bit long pair (no per-row BigDecimal). Same DECIMAL(38,s)-valued
     * result and null semantics as `sum(cast(x as decimal(28,s)))` —
     * equality and overflow posture proven in ExactSum128's doc and
-    * spec-asserted (ExactSum128Spec); |x| >= 1e(18-s) now fails LOUDLY
-    * where the decimal cast silently NULLed the row out of the sum.
+    * spec-asserted (ExactSum128Spec) inside the domain: finite
+    * |x| < 1e(18-s) is summed; anything else, NaN and ±Inf included, throws
+    * ArithmeticException (the decimal cast summed finite values up to
+    * 1e(28-s)).
     */
   def exactSum(x: Column, scale: Int): Column =
     graft.plans.ExactSum128.scaledSum(x.cast("double"), scale).cast("double")

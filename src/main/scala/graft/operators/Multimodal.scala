@@ -416,12 +416,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** Same decode with explicit intra-partition micro-batches — the batch
-    * shape a Pandas-UDF/`mapInPandas` (or Arrow-batched JNI codec) pipeline
-    * has: the codec is handed `batchSize` payloads at once and returns a
-    * batch of results, amortizing per-call overhead. Output is identical to
-    * [[decode]].
-    */
   /** Minimal PNG encoder (filter 0 + one zlib stream), JDK-only — the
     * fixture/synthesis counterpart of [[pngPixelBytes]]. Greyscale
     * (colorType 0) or RGB (colorType 2), depth 8. Used by the q103/q104
@@ -878,27 +872,6 @@ object Multimodal {
   def audioNearDups(media: DataFrame, maxHamming: Int,
                     maxBucket: Int = 50): DataFrame =
     hashNearDups(audioHashes(media), "doc_id", "ahash", maxHamming, maxBucket)
-
-  def decodeBatched(media: DataFrame, batchSize: Int): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
-    media.select("doc_id", "media_type", "payload", "n_bytes")
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          // a real pipeline passes the whole batch to the codec in one call
-          val decoded = batch.map { r =>
-            Option(r.getAs[Array[Byte]]("payload")).map(decodeOne)
-          }
-          batch.iterator.zip(decoded.iterator).map {
-            case (r, Some((w, h, sr, ch, cs, cc, fmt))) =>
-              Row(raw(r, "doc_id"), r.getAs[String]("media_type"),
-                raw(r, "n_bytes"), w, h, sr, ch, cs, cc, fmt)
-            case (r, None) =>
-              Row(raw(r, "doc_id"), r.getAs[String]("media_type"),
-                raw(r, "n_bytes"), null, null, null, null, null, null, null)
-          }
-        }
-      }(enc)
-  }
 
   // ---- video containers (r12): the modality ladder's fourth rung ---------
   //

@@ -105,25 +105,6 @@ object Relational {
     df.withColumn("rn", row_number().over(Window.partitionBy(group: _*).orderBy(order: _*)).cast("long"))
       .filter(col("rn") <= n)
 
-  /** [[topNPerGroup]] for LOW-CARDINALITY groups — the 100 TB variant.
-    * With a handful of groups (sources, languages, splits), a single window
-    * sorts corpus/|groups| rows per partition: group count, not data size,
-    * bounds the parallelism. Pre-pruning per (group, salt) first keeps only
-    * salt-bucket top-n survivors, so the final per-group sort sees at most
-    * `buckets`·n rows. Results are IDENTICAL to [[topNPerGroup]]
-    * (spec-asserted): a group-wide top-n row is top-n within its salt
-    * bucket, so the prune can never drop one. `saltBy` must be a
-    * deterministic per-row expression (e.g. a key column) so reruns agree.
-    */
-  def topNPerGroupSalted(df: DataFrame, group: Seq[Column], order: Seq[Column],
-                         n: Int, saltBy: Column, buckets: Int = 64): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val pruned = topNPerGroup(df.withColumn("_salt", pmod(saltBy, lit(buckets.toLong))),
-        group :+ col("_salt"), order, n)
-      .drop("rn", "_salt")
-    topNPerGroup(pruned, group, order, n)
-  }
-
   /** Missing-data repair (reference "Fixing the missing weather issue",
     * README.md:440-905): split facts into clean/broken on a predicate, strip
     * the broken measure, left-join a fix table on the repair key, union back,
@@ -172,25 +153,6 @@ object Relational {
     */
   def latestPerKey(df: DataFrame, key: Seq[Column], version: Seq[Column]): DataFrame =
     firstPerGroup(df, key, version.map(_.desc))
-
-  /** Skew-mitigating equi-join: the fact side's hot keys are split across
-    * `salts` sub-keys (deterministic hash of `saltSource`), and the dim side
-    * is replicated once per salt — so a key with 10⁹ fact rows lands on
-    * `salts` reducers instead of one. Result rows are identical to the plain
-    * join. (AQE's skew handling covers sort-merge joins; explicit salting is
-    * the portable fallback and the classic 100 TB recipe.)
-    */
-  def saltedJoin(facts: DataFrame, dim: DataFrame, key: String,
-                 saltSource: Column, salts: Int): DataFrame = {
-    // salts=0 would be SILENTLY empty: pmod-by-zero NULLs every fact salt
-    // while sequence(0, -1) emits a descending dim range (the
-    // sequence-default-step trap mixEpochs documents)
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    val saltedFacts = facts.withColumn("_salt", pmod(xxhash64(saltSource), lit(salts)))
-    val saltedDim = dim
-      .withColumn("_salt", explode(sequence(lit(0L), lit((salts - 1).toLong))))
-    saltedFacts.join(saltedDim, Seq(key, "_salt")).drop("_salt")
-  }
 
   /** Scale fallback for [[interestingKeys]] when the per-key aggregate is too
     * large for a single-partition ntile window (≳10⁷ keys): selection via

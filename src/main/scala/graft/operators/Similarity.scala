@@ -17,19 +17,13 @@ object Similarity {
     * the DuckDB oracle). This contract lives in exactly one place — the
     * recall specs compare these operators against each other.
     *
-    * The query set is SMALL by construction (a per-query window is fine for
-    * ranking), but its *input* is corpus-sized for the brute-force/probe-all
-    * paths — a plain `row_number` window would sort one corpus-sized
-    * partition per query on a single task. Routed through the salted
-    * two-phase top-N instead: per-(query, salt-bucket) prune first, so the
-    * final per-query sort sees at most buckets·k rows (result identical —
-    * spec-asserted in Relational's salted-top-N equality spec and every
-    * ANN-vs-brute-force comparison here).
+    * For k up to `spark.sql.optimizer.windowGroupLimitThreshold` (1000),
+    * Spark plans a Partial `WindowGroupLimit` below the per-query exchange,
+    * so each map partition ships at most k rows per query.
     */
   private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
-    Relational.topNPerGroupSalted(scored, Seq(col("query_id")),
-        Seq(col("cos").desc, col("neighbor_id")), k,
-        saltBy = xxhash64(col("neighbor_id")))
+    Relational.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("cos").desc, col("neighbor_id")), k)
       .withColumnRenamed("rn", "rnk")
 
   /** Nearest-centroid cell per corpus vector. Shared by the k-means trainer
@@ -702,12 +696,8 @@ object Similarity {
       // row (measured 2× end-to-end on a 200k-vector staged corpus)
       .withColumn("approx", NativeFns.pqScore(col("codes"), col("lut")))
       .transform(scoredCodes =>
-        // salted two-phase keep-best-`candidates`: the scored-code frame is
-        // corpus-sized per query, so a plain per-query row_number window
-        // would serialize a corpus-sized sort on one task (the q59 shape)
-        Relational.topNPerGroupSalted(scoredCodes, Seq(col("query_id")),
-          Seq(col("approx").desc, col("neighbor_id")), candidates,
-          saltBy = xxhash64(col("neighbor_id"))))
+        Relational.topNPerGroup(scoredCodes, Seq(col("query_id")),
+          Seq(col("approx").desc, col("neighbor_id")), candidates))
       .select(col("query_id"), col("neighbor_id"))
     // exact re-rank of survivors only
     val scored = approx

@@ -29,11 +29,10 @@ import org.apache.spark.sql.types._
   *     BIT-IDENTICAL to Spark's double→decimal cast (Cast goes through
   *     Decimal.set(double), which wraps the same valueOf; property-checked
   *     over 70k adversarial doubles including ties and full-mantissa
-  *     values, 0 divergences). |v| must stay under 10^(18-s) so the scaled
-  *     value fits a long — enforced with a LOUD ArithmeticException (the
-  *     decimal cast would silently NULL there; the operators that call
-  *     this already aborted via their own range asserts, so the loud throw
-  *     only CHANGES the error message, never a result);
+  *     values, 0 divergences). Its domain is finite |v| < 10^(18-s), so
+  *     the scaled value fits a long; anything else, NaN and ±Inf included,
+  *     throws ArithmeticException. This is NARROWER than the decimal path
+  *     it replaced: DECIMAL(28,s) summed finite values up to 10^(28-s);
   *   - [[Int128ProductSum]] accumulates Σ lx·ly in a 128-bit (hi, lo) long
   *     pair inside a codegen'd HashAggregate — per-row cost is one
   *     Math.multiplyHigh + a few long adds/bitwise ops, no allocation;
@@ -391,25 +390,6 @@ object ExactSum128 {
     ColumnBridge.column(
       Int128ProductSum(lx, Literal(1L), scale).toAggregateExpression())
   }
-
-  /** Σ (x·10^s)·(y·10^s) exactly, as DECIMAL(38,2s) — the LONG-path twin
-    * of `sum(cast(x as decimal(18,s)) * cast(y as decimal(18,s)))`. The
-    * children are pre-scaled LONG columns (so a caller can project the
-    * per-column rounding once and reuse it across pair moments).
-    */
-  def scaledProductSum(lx: Column, ly: Column, scale: Int): Column =
-    ColumnBridge.column(
-      Int128ProductSum(ColumnBridge.expression(lx),
-        ColumnBridge.expression(ly), 2 * scale).toAggregateExpression())
-
-  /** Σ lx exactly as DECIMAL(38,s), `lx` a pre-scaled LONG column — for
-    * callers that projected [[DoubleToScaledLong]] once and reuse it
-    * across several sums (the correlation-moment shape).
-    */
-  def scaledLongSum(lx: Column, scale: Int): Column =
-    ColumnBridge.column(
-      Int128ProductSum(ColumnBridge.expression(lx), Literal(1L), scale)
-        .toAggregateExpression())
 
   /** Scale-s integer rounding of a double column (see [[DoubleToScaledLong]]). */
   def toScaledLong(x: Column, scale: Int): Column =

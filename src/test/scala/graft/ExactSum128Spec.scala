@@ -18,9 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     (pairwise deletion) — r values bit-identical;
   *  4. overflow poisons to NULL (the decimal path's overflow-to-NULL
   *     class), never a silently wrapped wrong value;
-  *  5. out-of-range |v| >= 1e(18-s) fails LOUDLY (the decimal cast
-  *     silently NULLed such rows; the operators' range asserts made that
-  *     an abort — the throw keeps the abort, earlier and clearer).
+  *  5. the domain is finite |v| < 1e(18-s); anything else, NaN and ±Inf
+  *     included, fails LOUDLY with an ArithmeticException, and the largest
+  *     double below the bound is still summed.
   */
 class ExactSum128Spec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -190,13 +190,19 @@ class ExactSum128Spec extends AnyFunSuite {
   }
 
   test("out-of-range values fail loudly instead of silently vanishing from the sum") {
-    val df = Seq(1.0, 1.0e17).toDF("x")
-    val e = intercept[Exception] {
-      df.agg(graft.functions.NumFns.exactSum($"x", 2)).collect()
-    }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("graft_double_to_scaled_long")),
-      s"want the scaled-long range message in the failure chain, got: ${messages(e)}")
+    for (bad <- Seq(1.0e17, Double.NaN)) {
+      val e = intercept[Exception] {
+        Seq(1.0, bad).toDF("x").agg(graft.functions.NumFns.exactSum($"x", 2)).collect()
+      }
+      assert(messages(e).exists(_.contains("graft_double_to_scaled_long")),
+        s"$bad: want the scaled-long range message in the failure chain, got: ${messages(e)}")
+    }
+    // the largest double below the scale-2 bound 1e16 is inside the domain
+    val edge = Math.nextDown(1.0e16)
+    val got = Seq(1.0, edge).toDF("x")
+      .agg(graft.functions.NumFns.exactSum($"x", 2)).head().getDouble(0)
+    assert(got == 1.0 + edge, s"sum at the domain edge: $got")
   }
 }

@@ -370,11 +370,6 @@ class OperatorsSpec extends GraftSuite {
       .orderBy("doc_id").collect()
     assert(rows.map(_.getAs[Long]("checksum")).toSeq ==
       again.map(_.getAs[Long]("checksum")).toSeq)
-    // batched variant (mapInPandas-shaped) emits identical rows
-    val batched = Multimodal.decodeBatched(
-      Multimodal.asMediaTable(docs, "doc_id", "text"), 1)
-      .orderBy("doc_id").collect()
-    assert(batched.toSeq == again.toSeq)
   }
 
   test("Multimodal: real PNG/JPEG header bytes yield true dimensions; others fall back to the stub") {
@@ -400,21 +395,19 @@ class OperatorsSpec extends GraftSuite {
         (3L, "audio", junk), (4L, "image", corrupt), (5L, "image", shortSof))
       .toDF("doc_id", "media_type", "payload")
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy("doc_id").collect()
-      assert(rows(0).getAs[Long]("width") == 640L, "png width")
-      assert(rows(0).getAs[Long]("height") == 480L, "png height")
-      assert(rows(0).getAs[String]("format") == "png")
-      assert(rows(1).getAs[Long]("width") == 1024L, "jpeg width")
-      assert(rows(1).getAs[Long]("height") == 768L, "jpeg height")
-      assert(rows(1).getAs[String]("format") == "jpeg")
-      // non-image, corrupt, and truncated-SOF payloads degrade to the
-      // stub, never throw and never report garbage dims as a real decode
-      assert(rows(2).getAs[Any]("format") == null)
-      assert(rows(3).getAs[Any]("format") == null)
-      assert(rows(4).getAs[Any]("format") == null, "truncated SOF must not parse")
-      assert(rows.forall(_.getAs[Any]("checksum") != null))
-    }
+    val rows = Multimodal.decode(media).orderBy("doc_id").collect()
+    assert(rows(0).getAs[Long]("width") == 640L, "png width")
+    assert(rows(0).getAs[Long]("height") == 480L, "png height")
+    assert(rows(0).getAs[String]("format") == "png")
+    assert(rows(1).getAs[Long]("width") == 1024L, "jpeg width")
+    assert(rows(1).getAs[Long]("height") == 768L, "jpeg height")
+    assert(rows(1).getAs[String]("format") == "jpeg")
+    // non-image, corrupt, and truncated-SOF payloads degrade to the
+    // stub, never throw and never report garbage dims as a real decode
+    assert(rows(2).getAs[Any]("format") == null)
+    assert(rows(3).getAs[Any]("format") == null)
+    assert(rows(4).getAs[Any]("format") == null, "truncated SOF must not parse")
+    assert(rows.forall(_.getAs[Any]("checksum") != null))
   }
 
   test("Multimodal: real WAV header bytes yield sample rate and channels") {
@@ -439,16 +432,14 @@ class OperatorsSpec extends GraftSuite {
         (3L, "audio", truncated))
       .toDF("doc_id", "media_type", "payload")
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy("doc_id").collect()
-      assert(rows(0).getAs[Long]("sample_rate") == 44100L)
-      assert(rows(0).getAs[Long]("channels") == 2L)
-      assert(rows(0).getAs[String]("format") == "wav")
-      assert(rows(0).getAs[Any]("width") == null, "audio rows carry no image dims")
-      assert(rows(1).getAs[Long]("sample_rate") == 16000L, "JUNK-first chunk walk")
-      assert(rows(1).getAs[Long]("channels") == 1L)
-      assert(rows(2).getAs[Any]("format") == null, "truncated fmt must not parse")
-    }
+    val rows = Multimodal.decode(media).orderBy("doc_id").collect()
+    assert(rows(0).getAs[Long]("sample_rate") == 44100L)
+    assert(rows(0).getAs[Long]("channels") == 2L)
+    assert(rows(0).getAs[String]("format") == "wav")
+    assert(rows(0).getAs[Any]("width") == null, "audio rows carry no image dims")
+    assert(rows(1).getAs[Long]("sample_rate") == 16000L, "JUNK-first chunk walk")
+    assert(rows(1).getAs[Long]("channels") == 1L)
+    assert(rows(2).getAs[Any]("format") == null, "truncated fmt must not parse")
   }
 
   test("Multimodal: PNG content decode — IDAT inflate + unfilter reproduces the true pixel bytes") {
@@ -479,16 +470,14 @@ class OperatorsSpec extends GraftSuite {
     val media = Seq((1L, "image", png), (2L, "image", corrupt))
       .toDF("doc_id", "media_type", "payload")
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy("doc_id").collect()
-      assert(rows(0).getAs[String]("format") == "png")
-      assert(rows(0).getAs[Long]("width") == w && rows(0).getAs[Long]("height") == h)
-      assert(rows(0).getAs[Long]("content_checksum") == expectedSum,
-        "decoded pixel bytes must match the encoder's input pixels")
-      assert(rows(1).getAs[String]("format") == "png", "header survives corrupt IDAT")
-      assert(rows(1).getAs[Any]("content_checksum") == null,
-        "corrupt zlib stream must degrade to header-only, not garbage")
-    }
+    val rows = Multimodal.decode(media).orderBy("doc_id").collect()
+    assert(rows(0).getAs[String]("format") == "png")
+    assert(rows(0).getAs[Long]("width") == w && rows(0).getAs[Long]("height") == h)
+    assert(rows(0).getAs[Long]("content_checksum") == expectedSum,
+      "decoded pixel bytes must match the encoder's input pixels")
+    assert(rows(1).getAs[String]("format") == "png", "header survives corrupt IDAT")
+    assert(rows(1).getAs[Any]("content_checksum") == null,
+      "corrupt zlib stream must degrade to header-only, not garbage")
     // absurd declared dimensions (2^30 x 2^30): the Long size product
     // would overflow without the per-factor cap — must degrade to
     // header-only metadata, never allocate or throw
@@ -535,17 +524,15 @@ class OperatorsSpec extends GraftSuite {
     val media = Seq((1L, "image", jpeg), (2L, "image", truncated))
       .toDF("doc_id", "media_type", "payload")
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy("doc_id").collect()
-      assert(rows(0).getAs[String]("format") == "jpeg")
-      assert(rows(0).getAs[Long]("width") == w && rows(0).getAs[Long]("height") == h)
-      assert(rows(0).getAs[Long]("content_checksum") == expectedSum,
-        "decoded JPEG raster must match an independent ImageIO decode")
-      assert(rows(1).getAs[String]("format") == "jpeg", "header survives truncation")
-      assert(rows(1).getAs[Long]("width") == w)
-      assert(rows(1).getAs[Any]("content_checksum") == null,
-        "scan-less JPEG must degrade to header-only, not throw")
-    }
+    val rows = Multimodal.decode(media).orderBy("doc_id").collect()
+    assert(rows(0).getAs[String]("format") == "jpeg")
+    assert(rows(0).getAs[Long]("width") == w && rows(0).getAs[Long]("height") == h)
+    assert(rows(0).getAs[Long]("content_checksum") == expectedSum,
+      "decoded JPEG raster must match an independent ImageIO decode")
+    assert(rows(1).getAs[String]("format") == "jpeg", "header survives truncation")
+    assert(rows(1).getAs[Long]("width") == w)
+    assert(rows(1).getAs[Any]("content_checksum") == null,
+      "scan-less JPEG must degrade to header-only, not throw")
   }
 
   test("Multimodal: WAV content decode — the data chunk's PCM bytes are checksummed") {
@@ -567,29 +554,25 @@ class OperatorsSpec extends GraftSuite {
     val media = Seq((1L, "audio", good), (2L, "audio", overrun))
       .toDF("doc_id", "media_type", "payload")
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy("doc_id").collect()
-      assert(rows(0).getAs[Long]("sample_rate") == 44100L)
-      assert(rows(0).getAs[Long]("content_checksum") == expectedSum,
-        "PCM byte checksum must match the data chunk content")
-      assert(rows(1).getAs[String]("format") == "wav")
-      assert(rows(1).getAs[Any]("content_checksum") == null,
-        "overrunning data size must not checksum partial bytes")
-    }
+    val rows = Multimodal.decode(media).orderBy("doc_id").collect()
+    assert(rows(0).getAs[Long]("sample_rate") == 44100L)
+    assert(rows(0).getAs[Long]("content_checksum") == expectedSum,
+      "PCM byte checksum must match the data chunk content")
+    assert(rows(1).getAs[String]("format") == "wav")
+    assert(rows(1).getAs[Any]("content_checksum") == null,
+      "overrunning data size must not checksum partial bytes")
   }
 
-  test("Multimodal: null payloads pass through with null metadata (both variants)") {
+  test("Multimodal: null payloads pass through with null metadata") {
     import org.apache.spark.sql.functions.{col, lit, when}
     val docs = Seq((0L, "hello"), (1L, "world")).toDF("doc_id", "text")
     val media = Multimodal.asMediaTable(docs, "doc_id", "text")
       .withColumn("payload", when(col("doc_id") === 1L, lit(null)).otherwise(col("payload")))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy("doc_id").collect()
-      assert(rows.length == 2)
-      assert(rows(0).getAs[Any]("checksum") != null)
-      assert(rows(1).getAs[Any]("width") == null)
-      assert(rows(1).getAs[Any]("checksum") == null)
-    }
+    val rows = Multimodal.decode(media).orderBy("doc_id").collect()
+    assert(rows.length == 2)
+    assert(rows(0).getAs[Any]("checksum") != null)
+    assert(rows(1).getAs[Any]("width") == null)
+    assert(rows(1).getAs[Any]("checksum") == null)
   }
 
   test("Multimodal: NULL doc_id/n_bytes stay NULL through decode (no 0 coercion)") {
@@ -598,14 +581,12 @@ class OperatorsSpec extends GraftSuite {
     val media = Multimodal.asMediaTable(docs, "doc_id", "text")
       .withColumn("doc_id", when(col("doc_id") === 6L, lit(null)).otherwise(col("doc_id")))
       .withColumn("n_bytes", when(col("doc_id").isNull, lit(null)).otherwise(col("n_bytes")))
-    for (decoded <- Seq(Multimodal.decode(media), Multimodal.decodeBatched(media, 2))) {
-      val rows = decoded.orderBy(col("doc_id").asc_nulls_last).collect()
-      assert(rows.length == 2)
-      assert(rows(0).getAs[Any]("doc_id") == 5L)
-      // a getAs[Long] implementation would have coerced these to 0
-      assert(rows(1).getAs[Any]("doc_id") == null, "NULL doc_id coerced")
-      assert(rows(1).getAs[Any]("n_bytes") == null, "NULL n_bytes coerced")
-    }
+    val rows = Multimodal.decode(media).orderBy(col("doc_id").asc_nulls_last).collect()
+    assert(rows.length == 2)
+    assert(rows(0).getAs[Any]("doc_id") == 5L)
+    // a getAs[Long] implementation would have coerced these to 0
+    assert(rows(1).getAs[Any]("doc_id") == null, "NULL doc_id coerced")
+    assert(rows(1).getAs[Any]("n_bytes") == null, "NULL n_bytes coerced")
   }
 
   test("contaminationHits counts distinct shared n-grams, held-out docs excluded") {
@@ -947,7 +928,7 @@ class OperatorsSpec extends GraftSuite {
       assert(v <= exact(k) + 1e-12, s"cap raised the score for $k")
   }
 
-  test("loud guards: out-of-range profiles, fractional prefix weights, degenerate salts fail fast") {
+  test("loud guards: out-of-range profiles and fractional prefix weights fail fast") {
     import graft.operators.Relational
     // epoch-millis-scale values exceed DECIMAL(12,2): the non-ANSI cast
     // would silently NULL them out of the moment sums — must throw instead
@@ -975,12 +956,6 @@ class OperatorsSpec extends GraftSuite {
       Relational.prefixSum(frac, $"p", $"o", $"w", 64)
     }
     assert(e3.getMessage.contains("integral"))
-    // salts=0: pmod-by-zero fact side vs descending dim sequence — the
-    // join would be silently empty
-    val e4 = intercept[IllegalArgumentException] {
-      Relational.saltedJoin(frac, frac, "p", $"o", salts = 0)
-    }
-    assert(e4.getMessage.contains("salts"))
   }
 
   test("describeObjectProfile matches a hand-computed reference (nulls, ties, casts)") {

@@ -117,23 +117,36 @@ class PlanSpec extends GraftSuite {
     assert(offenders.isEmpty, s"unpartitioned window in: $offenders")
   }
 
-  test("ANN rankings are salted: every per-query ranking window is guarded by a per-(query, salt) prune") {
+  test("per-group rankings are group-limited: a Partial WindowGroupLimit prunes before the exchange, and no plan is salted") {
     // the round-3 weak spot: `row_number() OVER (PARTITION BY query_id)`
-    // whose input is the scored corpus serializes one corpus-sized sort per
-    // query. Every ANN query must carry the salted two-phase shape instead:
-    // a Window partitioned by (query_id, _salt) — the bounded prune — must
-    // appear in the plan. (The IVF probe window stays partitioned by
-    // query_id alone: its input is #queries × #cells, bounded by
-    // construction, and the salted prune for the actual ranking coexists
-    // with it in the same plan.)
-    val saltedPrune = raw"Window \[[^\]]*\], \[query_id#\d+L?, _salt#\d+L?\]".r
-    val annQueries = Seq("q26_ann_bruteforce", "q27_ann_lsh", "q48_ann_ivf",
-      "q63_ann_pq", "q65_ann_ivfpq", "q66_ann_pq_exact", "q67_ann_ivf_exact",
-      "q68_ann_ivfpq_exact", "q69_ann_lsh_exact")
-    val offenders = annQueries.filter(name =>
-      saltedPrune.findFirstIn(allPlans(name)).isEmpty)
+    // whose input is the scored corpus would ship and sort every scored row.
+    // Spark's InferWindowGroupLimit (limits up to
+    // spark.sql.optimizer.windowGroupLimitThreshold, 1000) plans a Partial
+    // WindowGroupLimit on the group key below the exchange, so each map
+    // partition ships at most k rows per group. Every topNPerGroup ranking
+    // must show it (for q63/q65, the 200/100-candidate prescreen does).
+    def limit(key: String, k: String, mode: String) =
+      raw"WindowGroupLimit \[$key#\d+L?\], \[[^\]]*\], row_number\(\), $k, $mode".r
+    val rankings = Map(
+      "q26_ann_bruteforce" -> "query_id", "q27_ann_lsh" -> "query_id",
+      "q48_ann_ivf" -> "query_id", "q59_weighted_sample" -> "source",
+      "q61_distinctive_terms" -> "source", "q63_ann_pq" -> "query_id",
+      "q65_ann_ivfpq" -> "query_id", "q67_ann_ivf_exact" -> "query_id",
+      "q69_ann_lsh_exact" -> "query_id", "q97_ann_index_lifecycle" -> "query_id",
+      "q107_ann_int_lsh" -> "query_id")
+    val offenders = rankings.toSeq.sorted.collect {
+      case (name, key) if limit(key, raw"\d+", "Partial").findFirstIn(allPlans(name)).isEmpty => name
+    }
     assert(offenders.isEmpty,
-      s"no salted per-query prune window in: $offenders\n${offenders.headOption.map(allPlans).getOrElse("")}")
+      s"no Partial group limit in: $offenders\n${offenders.headOption.map(allPlans).getOrElse("")}")
+    // q66/q68's 10⁶ prescreen is above the threshold, so it has no prune in
+    // either form; their match is the k = 5 re-rank, which reuses the prescreen's
+    // query_id partitioning and so runs as a Final limit with no exchange
+    val exactTwins = Seq("q66_ann_pq_exact", "q68_ann_ivfpq_exact").filter(name =>
+      limit("query_id", "5", "Final").findFirstIn(allPlans(name)).isEmpty)
+    assert(exactTwins.isEmpty, s"no k = 5 group limit in: $exactTwins")
+    val salted = allPlans.collect { case (name, plan) if plan.contains("_salt") => name }
+    assert(salted.isEmpty, s"salted ranking left in: $salted")
   }
 
   test("ANN plans use the native hot-path expressions, not composed fallbacks") {
@@ -166,7 +179,7 @@ class PlanSpec extends GraftSuite {
   test("PLANS.md is fresh: one heading per contract query, no extras") {
     // the explain-audit file went silently stale once (round 3); this pins
     // its heading set to the live contract so adding/renaming a query
-    // without regenerating (sbt Test/console < scripts/plans_dump.scala)
+    // without regenerating (sbt "Test/runMain graft.PlansDump")
     // fails the build instead of shipping a stale audit
     val plansFile = java.nio.file.Paths.get("PLANS.md")
     assert(java.nio.file.Files.exists(plansFile), s"missing ${plansFile.toAbsolutePath}")
@@ -178,6 +191,6 @@ class PlanSpec extends GraftSuite {
     val stale = headings -- contract
     assert(missing.isEmpty && stale.isEmpty,
       s"PLANS.md out of date — missing: ${missing.toSeq.sorted}, stale: ${stale.toSeq.sorted}; " +
-        "regenerate with `sbt Test/console < scripts/plans_dump.scala`")
+        "regenerate with `sbt \"Test/runMain graft.PlansDump\"`")
   }
 }

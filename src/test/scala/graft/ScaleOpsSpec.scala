@@ -7,29 +7,30 @@ import org.apache.spark.sql.functions._
 class ScaleOpsSpec extends GraftSuite {
   import spark.implicits._
 
-  test("saltedJoin produces exactly the plain join's rows") {
-    val ev = Readers.table(spark, sf, "events").select("event_id", "user_id", "value")
-    val dim = ev.groupBy("user_id").agg(count(lit(1)).as("user_n"))
-    val plain = ev.join(dim, "user_id")
-    val salted = Relational.saltedJoin(ev, dim, "user_id", $"event_id", 8)
-    assert(salted.count() == plain.count())
-    assert(salted.exceptAll(plain.select(salted.columns.map(col).toIndexedSeq: _*)).count() == 0)
-  }
-
-  test("topNPerGroupSalted equals the plain per-group top-N, at any bucket count") {
+  test("topNPerGroup equals a driver-side sort-and-take and prunes before its exchange") {
     // skew-shaped input: one giant group plus small ones, order-key ties
     val docs = Readers.table(spark, sf, "documents")
       .select($"doc_id", $"source", $"n_chars")
     val grp = Seq($"source")
     val ord = Seq($"n_chars", $"doc_id") // tie-break makes top-N unique
-    val plain = Relational.topNPerGroup(docs, grp, ord, 5)
+    val top = Relational.topNPerGroup(docs, grp, ord, 5)
       .select($"source", $"doc_id", $"rn")
-    for (b <- Seq(1, 3, 64)) {
-      val salted = Relational.topNPerGroupSalted(docs, grp, ord, 5, $"doc_id", b)
-        .select($"source", $"doc_id", $"rn")
-      assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
-        s"salted top-N diverged from plain at buckets=$b")
-    }
+    val want = docs.as[(Long, String, Long)].collect().toSeq
+      .groupBy(_._2).toSeq.flatMap { case (src, rows) =>
+        rows.sortBy(r => (r._3, r._1)).take(5).zipWithIndex
+          .map { case (r, i) => (src, r._1, i + 1L) }
+      }
+    val got = top.as[(String, Long, Long)].collect().toSeq
+    assert(got.sorted == want.sorted, "top-N diverged from the driver-side take")
+    // the per-group prune Spark infers: a Partial WindowGroupLimit under the
+    // exchange, so each map partition ships at most 5 rows per source
+    val plan = top.queryExecution.executedPlan.toString
+    val partial = raw"WindowGroupLimit \[source#\d+\], .*, Partial".r
+      .findFirstMatchIn(plan).map(_.start)
+    val exchange = raw"Exchange hashpartitioning\(source#\d+".r
+      .findFirstMatchIn(plan).map(_.start)
+    assert(partial.isDefined && exchange.isDefined && exchange.get < partial.get,
+      s"want a Partial WindowGroupLimit below the exchange:\n$plan")
   }
 
   test("globalOrderIndex equals the single-task row_number window, at any bucket width") {
