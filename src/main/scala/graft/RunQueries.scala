@@ -85,9 +85,10 @@ object RunQueries {
         spark = mkSession()
       }
       val t0 = System.nanoTime()
-      // evidence for failureVerdict: set the moment the budget path starts
-      // cancelling, so a budget-elapsed death can be adjudicated `timeout`
-      // only when a cancel was actually in flight
+      // evidence for failureVerdict: set once Par reports the elapsed budget
+      // (its tag cancel has run) and before the group cancel, so a
+      // budget-elapsed death can be adjudicated `timeout` only when a cancel
+      // was actually in flight
       val cancelFired = new java.util.concurrent.atomic.AtomicBoolean(false)
       def build(): (Long, String) = {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -106,34 +107,27 @@ object RunQueries {
         val (n, schema) =
           if (timeoutSec <= 0) build()
           else {
-            import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
-            import scala.concurrent.duration._
-            implicit val ec: ExecutionContext = ExecutionContext.global
-            // the job group must be set on the thread that RUNS the jobs
-            // (it is thread-local), so the whole build happens in the future
-            val f = Future {
-              spark.sparkContext.setJobGroup(s"rq-$name", name, interruptOnCancel = true)
-              try build() finally spark.sparkContext.clearJobGroup()
-            }
-            try Await.result(f, timeoutSec.seconds)
+            // the job group is thread-local: set here, Par's branch thread
+            // starts with it, so the group cancel below reaches its jobs
+            spark.sparkContext.setJobGroup(s"rq-$name", name, interruptOnCancel = true)
+            try Par.all(spark, timeoutSec)(() => build()).head
             catch {
-              case _: TimeoutException =>
+              case e: Par.BudgetElapsed =>
+                // Par has cancelled the build and waited (bounded) for it
+                // to end, so the next query is measured on a quiet scheduler
                 cancelFired.set(true)
                 // ...AndFutureJobs, not plain cancelJobGroup: an iterative
-                // driver-side query (e.g. connected-components rounds) keeps
-                // SUBMITTING new jobs after the timeout; cancelJobGroup only
-                // kills the currently-active ones, so the zombie would run
-                // concurrently with — and inflate — every subsequent query's
+                // driver-side query (e.g. connected-components rounds) that
+                // outlived Par's wait keeps SUBMITTING new jobs; marking the
+                // group fails each of them at once, so the zombie cannot run
+                // concurrently with — and inflate — every later query's
                 // measured timing in the sweep artifact
                 spark.sparkContext.cancelJobGroupAndFutureJobs(s"rq-$name")
-                // wait (bounded) for the zombie to actually die so the next
-                // query is measured on a quiet scheduler
-                try Await.ready(f, 120.seconds)
-                catch { case _: TimeoutException => println(
-                  s"WARN $name still running 120s after cancellation; " +
-                  "subsequent timings may be polluted") }
+                if (e.getSuppressed.nonEmpty) println(
+                  s"WARN $name still running ${Par.CancelWaitSec}s after cancellation; " +
+                  "subsequent timings may be polluted")
                 throw new RuntimeException(s"TIMEOUT after ${timeoutSec}s")
-            }
+            } finally spark.sparkContext.clearJobGroup()
           }
         val secs = (System.nanoTime() - t0) / 1e9
         nOk += 1

@@ -1829,33 +1829,26 @@ object SparkEntry {
       // index feeds three consumers; exchange reuse covers two).
       val docs = T(s, dir, "documents")
       val held = pmod(pmod(col("doc_id"), lit(100003L)) * 2654435761L, lit(100L)) >= 95
-      // r15 (overlap independent jobs): the
-      // contamination branch depends ONLY on the raw corpus — not on any
-      // dedup output (grams are computed over the ORIGINAL corpus by design,
-      // see below) — yet it used to run strictly after the eagerly
-      // materialized pairs + CC loop because it sat in the same lazy plan.
-      // Materialize it on ONE driver thread while the main thread runs the
-      // near-dup stages: its shuffles back-fill the cores the CC loop's
-      // serial checkpoint barriers leave idle. Byte-identical results — the
-      // checkpoint pins the same deterministic rows the lazy plan computed
-      // (measured at sf0.1/sf1; determinism audit: contaminationHits is a
-      // pure hash-join aggregate, no sampling/RNG/row-order dependence).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val contaminatedF = Future {
-        Dedup.contaminationHits(docs, col("doc_id"), col("text"), held, 3)
-          .filter(col("n_hits") > 0).select(col("doc_id")).localCheckpoint()
-      }
-      val k1 = Dedup.exact(docs, col("doc_id"), col("text"))
-        .select(col("keeper_id").as("doc_id"))
-      val d1 = docs.join(k1, "doc_id")
-      val pairs = Dedup.ngramJaccardPairs(d1, col("doc_id"), col("text"), 3, 0.5,
-        persistIndex = true)
-      val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-      val d2 = d1.join(comp, d1("doc_id") === comp("node"), "left")
-        .filter(col("node").isNull || col("component") === col("doc_id"))
-        .drop("node", "component")
-      val contaminated = Await.result(contaminatedF, scala.concurrent.duration.Duration.Inf)
+      // The contamination branch reads only the raw corpus (its grams are
+      // over the ORIGINAL corpus by design), so it runs beside the near-dup
+      // stages: its shuffles fill the cores the CC loop's serial checkpoint
+      // barriers leave idle. The checkpoint pins the same deterministic rows
+      // the lazy plan computes (contaminationHits is a pure hash-join
+      // aggregate: no sampling, RNG or row-order dependence).
+      val Seq(d2, contaminated) = Par.all(s)(
+        () => {
+          val k1 = Dedup.exact(docs, col("doc_id"), col("text"))
+            .select(col("keeper_id").as("doc_id"))
+          val d1 = docs.join(k1, "doc_id")
+          val pairs = Dedup.ngramJaccardPairs(d1, col("doc_id"), col("text"), 3, 0.5,
+            persistIndex = true)
+          val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+          d1.join(comp, d1("doc_id") === comp("node"), "left")
+            .filter(col("node").isNull || col("component") === col("doc_id"))
+            .drop("node", "component")
+        },
+        () => Dedup.contaminationHits(docs, col("doc_id"), col("text"), held, 3)
+          .filter(col("n_hits") > 0).select(col("doc_id")).localCheckpoint())
       val d3 = d2.filter(!held).join(contaminated, Seq("doc_id"), "left_anti")
       val toks = TextFns.tokens(col("text"))
       val n = size(toks).cast("double")

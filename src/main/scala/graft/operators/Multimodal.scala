@@ -389,14 +389,14 @@ object Multimodal {
     StructField("content_checksum", LongType),
     StructField("format", StringType)))
 
-  /** Batched decode: one stub call per row, executed per partition — no
-    * per-row task overhead, no driver involvement; the 100 TB path just
-    * raises partition count.
-    */
   // read nullable long columns as raw boxed values: getAs[Long] would unbox
   // a NULL to 0L, silently corrupting ids (and colliding with doc_id 0)
   private def raw(r: Row, name: String): Any = r.get(r.fieldIndex(name))
 
+  /** Batched decode: one stub call per row, executed per partition — no
+    * per-row task overhead, no driver involvement; the 100 TB path just
+    * raises partition count.
+    */
   def decode(media: DataFrame): DataFrame = {
     val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
     media.select("doc_id", "media_type", "payload", "n_bytes")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Par
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -153,16 +154,11 @@ object AnnIndex {
     val codes = pq.zip(codebook).map { case (c, cb) =>
       Similarity.pqEncode(corpus, Similarity.pqPackLit(cb), idCol, vecCol, c.numSub)
     }
-    // dim from the quantizer (tiny, one head()): recorded so a read-back
-    // months later can reject a corpus whose dimension drifted. The dim
-    // probe and the corpus footer-count are independent jobs — run them
-    // concurrently (r15, guide §2.6: the lifecycle's cost is serial
-    // per-job latency, not data)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val dimF = Future(centroids.select(size(col("cvec"))).head().getInt(0))
+    // dim from the quantizer: recorded so a read-back months later can
+    // reject a corpus whose dimension drifted. The centroids are a local
+    // relation, so this reads driver memory and starts no job.
+    val dim = centroids.select(size(col("cvec"))).head().getInt(0)
     val rows = corpus.count()
-    val dim = Await.result(dimF, scala.concurrent.duration.Duration.Inf)
     Model(Meta(FormatVersion, idCol, vecCol, dim, numCells, kmeansIters,
       trainSample, rows, pq, probeFraction, pqCandidateFraction,
       ivfpqCandidateFraction, cells.schema.json), centroids, cells, codebook, codes)
@@ -266,11 +262,10 @@ object AnnIndex {
     require(model.meta.pq.isDefined == model.codebook.isDefined &&
         model.meta.pq.isDefined == model.codes.isDefined,
       "PQ metadata and PQ components must agree")
-    // The component writes are INDEPENDENT jobs over disjoint directories,
-    // so they run concurrently (r12, q97 protocol trim — Spark schedules
-    // jobs from multiple driver threads fine); `_META.json` remains the
-    // commit marker written strictly LAST, so a failure in any component
-    // leaves the version incomplete exactly as the sequential form did.
+    // The component writes are independent jobs over disjoint directories,
+    // so they run concurrently; the first failure cancels the others.
+    // `_META.json` is the commit marker, written strictly LAST, so a failed
+    // write leaves the version incomplete and unreadable.
     // Postings partitioned by cell: a probe of p cells reads p directories —
     // catalog-level pruning, cheaper and earlier than row-group min/max.
     // Repartition BY the partition column first (compact's layout rule,
@@ -279,18 +274,16 @@ object AnnIndex {
     // tasks×cells files and the commit protocol pays per file; aligned,
     // each write task owns whole cells and the file count is bounded by
     // the cell count at ANY corpus size.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future(model.centroids.coalesce(1).write.mode("errorifexists")
-        .parquet(s"$dir/centroids")),
-      Future(model.cells.repartition(col("cell_id")).write.mode("errorifexists")
-        .partitionBy("cell_id").parquet(s"$dir/cells"))) ++
-      model.codebook.map(cb => Future(cb.coalesce(1).write.mode("errorifexists")
-        .parquet(s"$dir/codebook"))) ++
-      model.codes.map(cd => Future(cd.write.mode("errorifexists")
-        .parquet(s"$dir/codes")))
-    writes.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    val writes: Seq[() => Unit] = Seq(
+      () => model.centroids.coalesce(1).write.mode("errorifexists")
+        .parquet(s"$dir/centroids"),
+      () => model.cells.repartition(col("cell_id")).write.mode("errorifexists")
+        .partitionBy("cell_id").parquet(s"$dir/cells")) ++
+      model.codebook.map(cb => () => cb.coalesce(1).write.mode("errorifexists")
+        .parquet(s"$dir/codebook")) ++
+      model.codes.map(cd => () => cd.write.mode("errorifexists")
+        .parquet(s"$dir/codes"))
+    Par.all(spark)(writes: _*)
     // a fresh version is BORN at generation 0 whatever the source model's
     // gen was (e.g. a model read() from a compacted version, re-written as
     // a new version) — the postings above went to the birth directories
