@@ -850,8 +850,7 @@ object SparkEntry {
       // collapse the near-dup pair graph (3-gram jaccard >= 0.5) into
       // components: every doc labeled with the min reachable doc_id
       val pairs = Dedup.ngramJaccardPairs(
-        T(s, dir, "documents"), col("doc_id"), col("text"), 3, 0.5,
-        persistIndex = true)
+        T(s, dir, "documents"), col("doc_id"), col("text"), 3, 0.5)
       Dedup.connectedComponents(pairs, "doc_a", "doc_b")
         .orderBy("node")
     }, oracle = Some(

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{HashFns, TextFns}
 import graft.plans.NativeFns
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** localCheckpoint with RDD-block bookkeeping for iterative operators.
@@ -961,102 +962,103 @@ object Dedup {
   }
 
   /** Collapse a near-dup pair graph into components: every node gets the
-    * minimum doc id reachable from it (well-defined and engine-independent).
+    * minimum id reachable from it (well-defined and engine-independent).
+    * Returns (node, component), one row per distinct endpoint.
     *
-    * Iterative min-label propagation with pointer-doubling path compression
-    * (rounds = O(log diameter)), fused so each round is ONE logical plan —
-    * neighbor-min relax AND a compress hop through the previous round's
-    * labels — materialized by a single `localCheckpoint()` job. The compress
-    * hop reads the *previous* round's labels (one round stale); that is safe
-    * because labels only decrease and label(x) ≤ x is invariant, so a stale
-    * hop can never overshoot the component minimum — it just compresses one
-    * round later. Convergence is checked every `checkEvery` rounds (a count
-    * over the already-materialized checkpoint — no shuffle); a stale check
-    * only costs idempotent extra rounds. Each round releases the previous
-    * round's checkpoint blocks at the RDD level via [[Checkpoints]]
-    * (`Dataset.unpersist` would be a no-op for them), so peak storage is two
-    * label tables + the edge list.
+    * Alternating large-star / small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014) over
+    * canonical edges (hi, lo), hi >= lo:
+    *  - large-star, over both edge directions partitioned by node u:
+    *    m(u) = least(u, min neighbour); emit (v, m(u)) for each neighbour
+    *    v > u;
+    *  - small-star, partitioned by hi with m = min(lo): each row emits
+    *    itself if lo = m, else (lo, m) — one row out per row in.
+    * Each step is one window exchange and no join, and neither step makes
+    * the edge table grow. One round is one `localCheckpoint()` job: the
+    * previous round's large-star output, small-starred, then annotated for
+    * the next large-star; the first round's job also runs the first
+    * large-star over the pairs. Rounds are O(log² n) whatever the id order
+    * (a 16384-node path takes 14 with ascending ids, 11 with shuffled ones;
+    * q39's pair graphs at sf0.001–sf0.1 take one).
     *
-    * The driver-side loop iterates over ROUNDS, never over rows. (On a real
+    * Convergence costs no job of its own: an `Observation` on the
+    * large-star pass counts the nodes that are neither a centre (every
+    * neighbour larger) nor a leaf (exactly one distinct neighbour, and it
+    * is smaller). At zero the graph is a forest of stars centred on their
+    * minima, so the checkpoint just written already holds every node's
+    * component, m(u). Each round releases the previous checkpoint's
+    * blocks at the RDD level via [[Checkpoints]]; the returned frame is
+    * backed by the last one. The driver loop iterates over ROUNDS, never
+    * rows; it throws after `maxIters` unconverged rounds.
+    *
+    * Domain: a self-loop (x, x) makes x a node of its own. NULL is not an
+    * id and links nothing: it sorts above every id, so it is a node that
+    * never relays a label, and its row reports the least component among
+    * its partners. A pair with two NULL endpoints is ignored. (On a real
     * cluster use reliable checkpoint() if executor loss must be survivable
     * mid-algorithm.)
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 20, checkEvery: Int = 1): DataFrame = {
-    // loud knob guards (the capIndexByDf convention): checkEvery = 0 would
-    // otherwise burn a full Spark round before dying on a bare '/ by zero'
+                          maxIters: Int = 20): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
-    // undirected edge list, both directions — checkpointed: every round
-    // joins against it, and without materialization each round would
-    // re-execute the full upstream pair pipeline. No distinct(): min-agg
-    // propagation is idempotent under duplicate edges.
-    val (edges, edgeBlocks) = Checkpoints.tracked(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
-    // r14: fold the FIRST min-propagation round into initialization — the
-    // neighbor-min groupBy has the same single-shuffle shape as the old
-    // node-list distinct(), so labels start one round ahead for free
-    // (a clique then converges after ONE loop round instead of two; the
-    // checkEvery default drops to 1 so the loop stops the round it
-    // converges — the check is a filter over the materialized checkpoint,
-    // far cheaper than the extra round it saves). Fixpoint unchanged: min
-    // reachable id per component.
-    var (labels, labelBlocks) = Checkpoints.tracked(
-      edges.groupBy(col("src").as("node"))
-        .agg(min(col("dst")).as("_nbr_min"))
-        .select(col("node"),
-          least(col("node"), col("_nbr_min")).as("label"),
-          col("node").as("old_label")))
+    val (a, b) = (col(aCol), col(bCol))
+    val (u, v, m, hi, lo) = (col("u"), col("v"), col("m"), col("hi"), col("lo"))
+    val byNode = Window.partitionBy(u).orderBy(v)
+    val whole = byNode.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val (nMin, nMax) = (min(v).over(whole), max(v).over(whole))
+    val centre = coalesce(nMin >= u, lit(true))
+    // a node next to a NULL must be a centre: NULL's row reads its label
+    val leaf = nMin === nMax && nMax < u && !max(v.isNull).over(whole)
+    // both directions of every edge (a self-loop once), partitioned by node:
+    // m(u), one `first` row per node, and whether the node is unsettled
+    def annotate(edges: DataFrame): DataFrame = edges
+      .select(inline(when(hi === lo, array(struct(hi.as("u"), lo.as("v"))))
+        .otherwise(array(struct(hi.as("u"), lo.as("v")), struct(lo.as("u"), hi.as("v"))))))
+      .select(u, v, least(u, nMin).as("m"), (row_number().over(byNode) === 1).as("first"),
+        (u.isNotNull && !(centre || leaf)).as("unsettled"))
+    // large-star emission; a self-loop survives while its node is a local
+    // minimum, so an isolated (x, x) keeps x in the graph
+    def largeStar(annotated: DataFrame): DataFrame = annotated
+      .filter(u.isNotNull && (v.isNull || v > u || (v === u && m === u)))
+      .select(v.as("hi"), m.as("lo"))
+    // a NULL hi row is kept as is, so NULL never links its partners
+    def smallStar(edges: DataFrame): DataFrame = {
+      val sm = min(lo).over(Window.partitionBy(hi))
+      edges.select(when(hi.isNull || lo === sm, hi).otherwise(lo).as("hi"),
+        when(hi.isNull, lo).otherwise(sm).as("lo"))
+    }
+    // the first large-star rides the first round's job, so a graph one
+    // contraction round from stars converges in that job
+    var edges = largeStar(annotate(pairs.filter(a.isNotNull || b.isNotNull)
+      .select(when(a.isNotNull && b.isNotNull, greatest(a, b)).as("hi"), least(a, b).as("lo"))))
+    var star: DataFrame = null
+    var blocks: Seq[org.apache.spark.rdd.RDD[_]] = Nil
     var iter = 0
     var converged = false
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     // try/finally over the rounds: the non-convergence throw (and any
-    // mid-round job failure) must still release the edge list and the
-    // current label checkpoint — otherwise up to two corpus-scale block
-    // sets linger until driver GC (the Checkpoints header's failure mode)
+    // mid-round job failure) must still release the current checkpoint
     try {
-    while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
-      val neighborMin = edges
-        .join(labels, edges("src") === labels("node"))
-        .groupBy(col("dst").as("n2"))
-        .agg(min(col("label")).as("nbr_label"))
-      val lookup = labels.select(col("node").as("p_node"), col("label").as("p_label"))
-      val (next, nextBlocks) = Checkpoints.tracked(
-        labels
-          .join(neighborMin, labels("node") === col("n2"), "left")
-          .select(col("node"), col("label").as("prev_label"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("l1"))
-          .join(lookup, col("l1") === col("p_node"), "left")
-          .select(col("node"), col("prev_label").as("old_label"),
-            least(col("l1"), coalesce(col("p_label"), col("l1"))).as("label"))
-          .select(col("node"), col("label"), col("old_label")))
-      labels = next
-      iter += 1
-      if (iter % checkEvery == 0 || iter >= maxIters) {
-        // cheap: a filter over the materialized checkpoint, no shuffle
-        converged = labels.filter(col("label") =!= col("old_label")).isEmpty
+      while (!converged && iter < maxIters) {
+        val obs = org.apache.spark.sql.Observation()
+        val (next, nextBlocks) = Checkpoints.tracked(annotate(smallStar(edges))
+          .observe(obs, count(when(col("first") && col("unsettled"), 1)).as("unsettled")))
+        Checkpoints.release(blocks)
+        star = next
+        blocks = nextBlocks
+        iter += 1
+        converged = obs.get("unsettled") == 0L
+        edges = largeStar(star)
       }
-      // `next` is materialized (eager checkpoint), so the previous round's
-      // blocks can be dropped — nothing reads them again
-      Checkpoints.release(labelBlocks)
-      labelBlocks = nextBlocks
-      if (verbose) System.err.println(
-        f"[cc] round $iter: converged=$converged, ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    if (!converged) {
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          "(component diameter exceeds maxIters) — raise maxIters")
-    }
+      if (!converged) {
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters rounds " +
+            "(component diameter exceeds maxIters) — raise maxIters")
+      }
+      star.filter(col("first")).select(u.as("node"), m.as("component"))
     } finally {
-      // edges are never read after the loop; labelBlocks back the RETURNED
-      // frame on success, so they are released only on the failure path
-      Checkpoints.release(edgeBlocks)
-      if (!converged) Checkpoints.release(labelBlocks)
+      // the last checkpoint backs the RETURNED frame on success
+      if (!converged) Checkpoints.release(blocks)
     }
-    labels.select(col("node"), col("label").as("component"))
   }
 
   /** Sequence-level (chunk) exact dedup: flag, for every row, whether it is
@@ -1285,16 +1287,19 @@ object Dedup {
     * across many documents is template, not content, and the copy in the
     * "first" document is as worthless as the rest.
     *
-    * Returns one row per input document (empty documents included):
-    * (doc_id, clean_text, n_chunks, n_dropped), order restored by chunk
-    * index, chunks re-joined single-spaced.
+    * Returns one row per input document: (doc_id, clean_text, n_chunks,
+    * n_dropped), order restored by chunk index, chunks re-joined
+    * single-spaced. Domain: `doc_id` is the documents' key (unique, not
+    * NULL). A chunk repeated inside one document counts once toward its
+    * df. NULL text has no chunks: ("", 0, 0). Empty text is one empty
+    * chunk, kept unless `minDf` documents have it. A document shorter than
+    * `chunkTokens` tokens is one chunk.
     *
-    * Shape: df counting is a hash-groupBy on the chunk text (at 100 TB,
-    * pre-aggregate on an 8-byte hash and confirm — the q21 ladder); the
-    * verdict is an equi-join of chunks against the df table (AQE
-    * broadcasts it when the boilerplate set is small, which high-df
-    * filtering makes likely); rebuild is one groupBy(doc) over surviving
-    * chunks. No window over corpus-sized input, no driver state.
+    * Shape: two hash exchanges and no join. df is the largest
+    * `dense_rank()` of doc_id within the chunk_text window (one exchange,
+    * on chunk_text), which counts distinct documents; the rebuild is one
+    * groupBy(doc_id). `explode_outer` keeps a chunkless document as one
+    * row, so no join back to `docs` is needed. No driver state.
     */
   def boilerplateStrip(docs: DataFrame, id: Column, text: Column,
                        chunkTokens: Int, minDf: Long): DataFrame = {
@@ -1310,31 +1315,29 @@ object Dedup {
         // guarded sequence (review r11): under legacy non-ANSI confs
         // size(NULL) is -1, nChunks 0, and sequence(0, -1) steps DOWN to
         // [0, -1] — two phantom chunks per null-text doc. The when keeps
-        // the span empty for nChunks <= 0 (and NULL → otherwise → empty,
-        // matching ANSI's no-rows behavior), conf-independent.
-        explode(transform(
+        // the span empty for nChunks <= 0 (and NULL → otherwise → empty),
+        // conf-independent; explode_outer turns it into one NULL chunk.
+        explode_outer(transform(
           when(nChunks >= 1L, sequence(lit(0L), nChunks - 1))
             .otherwise(array().cast("array<bigint>")),
           i => struct(i.as("chunk_idx"),
             concat_ws(" ", slice(col("_toks"), (i * chunkTokens + 1).cast("int"),
               lit(chunkTokens))).as("chunk_text")))).as("c"))
       .select(col("doc_id"), col("c.chunk_idx"), col("c.chunk_text"))
-    val dfs = chunks.groupBy(col("chunk_text"))
-      .agg(count_distinct(col("doc_id")).as("df"))
-    val rebuilt = chunks.join(dfs, Seq("chunk_text"))
-      .withColumn("is_boiler", col("df") >= minDf)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(col("is_boiler").cast("long")).as("n_dropped"),
+    val byChunk = Window.partitionBy(col("chunk_text"))
+    val isBoiler = chunks
+      .withColumn("_rank", dense_rank().over(byChunk.orderBy(col("doc_id"))))
+      .select(col("doc_id"), col("chunk_idx"), col("chunk_text"),
+        (col("chunk_idx").isNotNull && max(col("_rank")).over(byChunk) >= minDf)
+          .as("is_boiler"))
+    isBoiler.groupBy(col("doc_id"))
+      .agg(
         concat_ws(" ", transform(
-          array_sort(collect_list(when(!col("is_boiler"),
+          array_sort(collect_list(when(col("chunk_idx").isNotNull && !col("is_boiler"),
             struct(col("chunk_idx"), col("chunk_text"))))),
-          c => c.getField("chunk_text"))).as("clean_text"))
-    docs.select(id.as("doc_id")).join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
+          c => c.getField("chunk_text"))).as("clean_text"),
+        count(col("chunk_idx")).as("n_chunks"),
+        count(when(col("is_boiler"), 1)).as("n_dropped"))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

@@ -995,13 +995,90 @@ class OperatorsSpec extends GraftSuite {
   }
 
   test("connectedComponents fails loudly (and releases its checkpoints) when the diameter exceeds maxIters") {
-    // a 64-node chain needs ~log2(64) pointer-doubling rounds; maxIters=1
-    // cannot converge — the operator must throw, not return partial labels
+    // a 64-node chain needs 6 rounds; maxIters=1 cannot converge — the
+    // operator must throw, not return partial labels
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    // compared by id: the ContextCleaner may drop an earlier test's blocks
+    // meanwhile, so a size comparison could miss a leak or flag none
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, "a", "b", maxIters = 1)
     }
     assert(e.getMessage.contains("did not converge"))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"the failed run left checkpoint blocks behind: RDDs $left")
+  }
+
+  /** Driver-side union-find: every endpoint labelled with the least id of
+    * its component — the reference connectedComponents must equal.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def components(edges: Seq[(Long, Long)], maxIters: Int = 20): Map[Long, Long] = {
+    val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", maxIters)
+      .as[(Long, Long)].collect()
+    assert(got.map(_._1).distinct.length == got.length, "one row per node")
+    got.toMap
+  }
+
+  private def shuffledPath(n: Int, seed: Int): Seq[(Long, Long)] = {
+    val ids = new scala.util.Random(seed).shuffle((0L until n.toLong).toVector)
+    ids.sliding(2).map(p => (p(0), p(1))).toSeq
+  }
+
+  test("connectedComponents converges on a 64-node path with shuffled ids within the default maxIters") {
+    // ids do not increase along this path: the round count must not
+    // depend on id order
+    val path = shuffledPath(64, 7)
+    assert(components(path) == unionFind(path))
+  }
+
+  test("connectedComponents matches union-find on a 4096-node shuffled path") {
+    val path = shuffledPath(4096, 11)
+    assert(components(path) == unionFind(path))
+  }
+
+  test("connectedComponents matches union-find with duplicate and reversed edges") {
+    val rnd = new scala.util.Random(3)
+    for (graph <- 1 to 4) {
+      val edges = Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+        .filter { case (a, b) => a != b }
+      val dup = edges ++ edges.take(20) ++ edges.take(10).map(_.swap)
+      assert(components(dup) == unionFind(dup), s"graph $graph")
+    }
+    // every pair oriented a > b
+    val reversed = Seq((9L, 3L), (3L, 1L), (7L, 5L), (8L, 7L), (5L, 2L))
+    assert(components(reversed) == unionFind(reversed))
+    assert(components(reversed) ==
+      Map(9L -> 1L, 3L -> 1L, 1L -> 1L, 8L -> 2L, 7L -> 2L, 5L -> 2L, 2L -> 2L))
+  }
+
+  test("connectedComponents: a self-loop makes its node a component of its own") {
+    val edges = Seq((3L, 3L), (1L, 2L), (4L, 4L), (4L, 6L), (6L, 6L))
+    assert(components(edges) == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 6L -> 4L))
+    // a self-loop beside a path that takes several rounds
+    val path = shuffledPath(64, 5) :+ ((100L, 100L))
+    assert(components(path) == unionFind(path))
+  }
+
+  test("connectedComponents: a NULL endpoint links nothing and reports its partner's component") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (null, 5L), (3L, null), (3L, 4L))
+      .toDF("a", "b")
+    val got = Dedup.connectedComponents(pairs, "a", "b").collect()
+      .map(r => (Option(r.get(0)), r.getLong(1))).toSet
+    assert(got == Set((Some(1L), 1L), (Some(2L), 1L), (Some(3L), 3L), (Some(4L), 3L),
+      (Some(5L), 5L), (None, 3L)))
   }
 
   test("contaminationGramReport counts distinct docs per leaked gram, held-only grams excluded") {

@@ -59,6 +59,19 @@ class QueriesSpec extends GraftSuite {
     assert(eager.isEmpty, s"builders that started Spark jobs: $eager")
   }
 
+  test("q39 and q72 start no more Spark jobs than measured to build and run") {
+    // build plus one full run into the noop sink at sf0.001, tables already
+    // open (a count() can let the optimizer skip part of a query's plan).
+    // The bounds are the counts star-contraction components (q39) and the
+    // one-window strip (q72) start; they may only go down
+    val bounds = Map("q39_dedup_clusters" -> 9, "q72_boilerplate_strip" -> 5)
+    graft.sources.Readers.table(spark, sf, "documents")
+    val jobs = bounds.keys.toSeq.sorted.map(n => n -> jobsStartedBy(
+      SparkEntry.queries(n)(spark, sf).write.format("noop").mode("overwrite").save())._2)
+    val over = jobs.filter { case (n, j) => j > bounds(n) }
+    assert(over.isEmpty, s"jobs started (bound ${bounds}): $over")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -296,6 +296,41 @@ class ScaleOpsSpec extends GraftSuite {
       "unreached threshold must reconstruct the original text exactly")
   }
 
+  test("boilerplateStrip domain edges: in-doc repeats, NULL, empty and short text; two exchanges, no join") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // "h1 h2" twice in doc 1 and once in doc 2 is df 2, under minDf 3;
+    // "b1 b2" in docs 6-8 is df 3, stripped everywhere
+    // three input partitions, so the plan needs its exchanges
+    val docs = spark.sparkContext.parallelize(Seq[(Long, String)](
+      (1L, "h1 h2 u1 u2 h1 h2"), (2L, "h1 h2 v1 v2"), (3L, null), (4L, ""), (5L, "w"),
+      (6L, "b1 b2 x1"), (7L, "b1 b2"), (8L, "y1 y2 b1 b2")), 3).toDF("doc_id", "text")
+    val stripped = Dedup.boilerplateStrip(docs, $"doc_id", $"text", chunkTokens = 2, minDf = 3)
+    val got = stripped.as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got == Seq(
+      (1L, "h1 h2 u1 u2 h1 h2", 3L, 0L), // a repeat inside one doc counts once
+      (2L, "h1 h2 v1 v2", 2L, 0L),
+      (3L, "", 0L, 0L), // NULL text: no chunks
+      (4L, "", 1L, 0L), // empty text: one empty chunk, kept
+      (5L, "w", 1L, 0L), // shorter than one chunk
+      (6L, "x1", 2L, 1L), (7L, "", 1L, 1L), (8L, "y1 y2", 2L, 1L)))
+    val plan = stripped.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"join planned:\n$plan")
+    val keys = plan.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).mkString(",")
+        case other => other.toString
+      }
+    }
+    assert(keys.sorted == Seq("chunk_text", "doc_id"), s"exchanges: $keys\n$plan")
+  }
+
   test("semanticDedup equals a composed cluster-blocked reference; minCos=-1 keeps one per cell") {
     import graft.operators.{Dedup, Similarity}
     val embs = Readers.table(spark, sf, "embeddings")
