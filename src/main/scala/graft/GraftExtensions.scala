@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Session extensions: expose the native expressions to SQL users
-  * (`SELECT graft_cosine(a.embedding, b.embedding) ...`). Registered via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * (`SELECT graft_cosine(a.embedding, b.embedding) ...`), plan the native
+  * as-of join, and sort a one-task input in place ([[graft.plans.OneTaskSort]]).
+  * Registered via `SparkSession.builder().withExtensions(new GraftExtensions)`.
   *
   * Builders validate arity up front: a wrong argument count must produce
   * the function's usage string, not a raw IndexOutOfBoundsException from
@@ -23,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectQueryStagePrepRule(graft.plans.OneTaskSort(_))
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),

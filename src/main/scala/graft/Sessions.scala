@@ -17,4 +17,25 @@ object Sessions {
 
   def id(spark: SparkSession): String =
     ids.computeIfAbsent(spark, _ => java.util.UUID.randomUUID.toString)
+
+  private val scratch = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+
+  /** An empty `java.io.tmpdir/graft_<name>_<session id>` for a query that
+    * writes and reads back a table: keyed by session, so two sessions (or
+    * two JVMs) never clobber each other's copy; cleared on every call, so a
+    * rerun starts clean; deleted when the session's SparkContext stops.
+    */
+  def scratchDir(spark: SparkSession, name: String): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${name}_${id(spark)}")
+    graft.sources.Writers.deleteRecursively(dir)
+    if (scratch.add(dir))
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          graft.sources.Writers.deleteRecursively(dir)
+          scratch.remove(dir)
+        }
+      })
+    dir
+  }
 }

@@ -1109,13 +1109,9 @@ object SparkEntry {
       val ev = T(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       val version = Seq(col("ts"), col("event_id"))
-      // fixed, reused location (not a fresh createTempDirectory per call):
-      // repeated bench/verify runs would otherwise each leak a full parquet
-      // copy of the events table into /tmp. Cleared before seeding so the
-      // query stays idempotent.
-      val root = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_q53_upsert")
-      Writers.deleteRecursively(root)
+      // one directory per session, cleared before seeding so the query
+      // stays idempotent, deleted when the context stops
+      val root = Sessions.scratchDir(s, "q53_upsert")
       val path = root.resolve("events_current").toString
       Writers.upsert(s, path, ev.filter(pmod(col("event_id"), lit(2)) === 0),
         Seq("user_id"), version)
@@ -1210,11 +1206,8 @@ object SparkEntry {
       // cost follows batch size plus one index scan, never a corpus
       // re-shingle. Cross-set near-dup pairs surface as the hygiene report.
       val docs = T(s, dir, "documents")
-      // fixed, reused location + cleared first: same idempotence/leak
-      // rationale as q53's upsert table
-      val root = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_q57_index")
-      Writers.deleteRecursively(root)
+      // per-session directory, cleared first: as q53's upsert table
+      val root = Sessions.scratchDir(s, "q57_index")
       val path = root.resolve("corpus_shingle_index").toString
       Writers.writeSorted(
         Dedup.shingleIndex(docs.filter(pmod(col("doc_id"), lit(10L)) =!= 7),
@@ -2579,12 +2572,10 @@ object SparkEntry {
       // append-through-stored-centroids routing, and compact's
       // content-preserving rewrite — a lost or duplicated posting anywhere
       // in that lifecycle changes the exact top-5 and fails the hash.
-      // Same zero-norm caveat as q67/q68; same fixed-tmp idempotency as
-      // q53 (repeated bench/verify runs must not leak parquet copies).
+      // Same zero-norm caveat as q67/q68; same per-session scratch
+      // directory as q53.
       val embs = T(s, dir, "embeddings")
-      val root = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_q97_annindex")
-      Writers.deleteRecursively(root)
+      val root = Sessions.scratchDir(s, "q97_annindex")
       val path = root.resolve("ann_index").toString
       // numCells = 4 (r11: 16 → 8; r12: 8 → 4): probe-all
       // exactness is independent of cell count (every cell is probed), and

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   * path is therefore:
   *
   *   - [[DoubleToScaledLong]] rounds a double to its scale-s integer ONCE
-  *     per row, via java.math.BigDecimal.valueOf(v).setScale(s, HALF_UP) —
+  *     per row, as java.math.BigDecimal.valueOf(v).setScale(s, HALF_UP)
+  *     does (computed in double arithmetic where the result is provably the
+  *     same, see `DoubleToScaledLong.toScaledLong`) —
   *     BIT-IDENTICAL to Spark's double→decimal cast (Cast goes through
   *     Decimal.set(double), which wraps the same valueOf; property-checked
   *     over 70k adversarial doubles including ties and full-mantissa
@@ -82,7 +84,25 @@ case class DoubleToScaledLong(child: Expression, scale: Int)
 }
 
 object DoubleToScaledLong {
-  /** The per-row kernel — public because generated code calls it. */
+  private val Pow10 = Array(1d, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6) // exact doubles
+  private val TwoPow52 = 4503599627370496d
+
+  /** The per-row kernel — public because generated code calls it.
+    *
+    * FAST PATH. a = |v·10^s| in double arithmetic. When a < 2^52 and
+    * frac(a) lies more than 4·ulp(a) from 0.5, the result is
+    * ±(floor(a) + [frac(a) > 0.5]); otherwise [[viaBigDecimal]] decides.
+    * Why that equals the BigDecimal route: `Double.toString(v)` prints
+    * digits D that read back as v, so |D − v| ≤ ulp(v)/2. With
+    * y = fl(v·10^s) (10^s is exact for s ≤ 6, so one rounding),
+    * |y − v·10^s| ≤ ulp(y)/2 and 10^s·ulp(v) ≤ 2·ulp(y), hence
+    * |D·10^s − y| ≤ 1.5·ulp(y). HALF_UP rounding is constant between
+    * consecutive half-integers, so when frac(a) is farther than that from
+    * 0.5 (the margin is 4·ulp), D·10^s and a round to the same integer.
+    * floor and frac are exact below 2^52. Ties such as 0.125 at scale 2,
+    * and products such as 1.005·100 that land within an ulp of .5, take
+    * the BigDecimal route.
+    */
   def toScaledLong(v: Double, scale: Int, maxAbs: Double): Long = {
     // NaN/±Inf have no decimal expansion: valueOf would throw a cryptic
     // NumberFormatException; match the decimal cast's message class loudly
@@ -92,10 +112,26 @@ object DoubleToScaledLong {
         s"graft_double_to_scaled_long(scale=$scale) supports finite |v| < " +
           s"1e${18 - scale}; got $v — widen the operator's scale contract " +
           "or profile a scaled column")
+    val a = math.abs(v * Pow10(scale))
+    if (a < TwoPow52) {
+      val f = math.floor(a)
+      val frac = a - f
+      if (math.abs(frac - 0.5) > 4 * math.ulp(a)) {
+        val r = f.toLong + (if (frac > 0.5) 1L else 0L)
+        return if (v < 0) -r else r
+      }
+    }
+    viaBigDecimal(v, scale)
+  }
+
+  /** v rounded HALF_UP to scale s from the decimal digits
+    * `Double.toString(v)` prints — what Spark's double→decimal cast does (`Decimal.set(double)` wraps the
+    * same `BigDecimal.valueOf`). The reference the fast path must equal.
+    */
+  def viaBigDecimal(v: Double, scale: Int): Long =
     java.math.BigDecimal.valueOf(v)
       .setScale(scale, java.math.RoundingMode.HALF_UP)
       .unscaledValue().longValueExact()
-  }
 }
 
 /** `Math.multiplyHigh` as a codegen-able expression: the high 64 bits of

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     class), never a silently wrapped wrong value;
   *  5. the domain is finite |v| < 1e(18-s); anything else, NaN and ±Inf
   *     included, fails LOUDLY with an ArithmeticException, and the largest
-  *     double below the bound is still summed.
+  *     double below the bound is still summed;
+  *  6. the per-row rounding's double-arithmetic fast path returns what the
+  *     BigDecimal route returns, interpreted and in generated code.
   */
 class ExactSum128Spec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -204,5 +206,56 @@ class ExactSum128Spec extends AnyFunSuite {
     val got = Seq(1.0, edge).toDF("x")
       .agg(graft.functions.NumFns.exactSum($"x", 2)).head().getDouble(0)
     assert(got == 1.0 + edge, s"sum at the domain edge: $got")
+  }
+
+  test("the double-arithmetic rounding equals the BigDecimal route at scales 0-6, interpreted and generated") {
+    import graft.plans.DoubleToScaledLong
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.DoubleType
+    val rnd = new scala.util.Random(20261019)
+    def around(v: Double, n: Int): Seq[Double] =
+      Iterator.iterate(v)(Math.nextUp).take(n).toSeq ++ Iterator.iterate(v)(Math.nextDown).take(n).toSeq
+    for (s <- 0 to 6) {
+      val p = math.pow(10, s)
+      val maxAbs = math.pow(10, 18 - s)
+      // cent-grained prices × (1 − discount), and × (1 + tax)
+      val priced = Seq.fill(20000) {
+        val price = (1 + rnd.nextInt(10000000)) / 100.0
+        val disc = rnd.nextInt(11) / 100.0
+        if (rnd.nextBoolean()) price * (1 - disc) else price * (1 - disc) * (1 + rnd.nextInt(9) / 100.0)
+      }
+      // (k + 0.5) / 10^s ties, decimal ties whose binary product misses .5
+      // by an ulp or so (1.005 at scale 2), and their neighbours
+      val ties = (Seq.fill(3000)((rnd.nextInt(1 << 24) + 0.5) / p) ++
+        Seq.fill(3000)((rnd.nextInt(1 << 20) * 10L + 5) / (p * 10)) ++
+        Seq(0.125, 1.005, 2.675, 0.045, 1.0005, 4.35)).flatMap(around(_, 3))
+      val tiny = Seq(0.0, -0.0, Double.MinPositiveValue, java.lang.Double.MIN_NORMAL,
+        Math.nextDown(java.lang.Double.MIN_NORMAL), 1e-300, 0.5 / p, 0.49999999999 / p)
+      // |v·10^s| next to 2^52, where the fast path ends, and next to maxAbs
+      val edges = around(4503599627370496d / p, 40) ++ around(4503599627370495.5 / p, 5) ++
+        around(Math.nextDown(maxAbs), 20)
+      // random bit patterns: any exponent, and exponents inside the domain
+      val bits = Seq.fill(20000)(java.lang.Double.longBitsToDouble(rnd.nextLong())) ++
+        Seq.fill(20000) {
+          val e = 1023L - 60 + rnd.nextInt(60 + 60 - s * 4)
+          java.lang.Double.longBitsToDouble((e << 52) | (rnd.nextLong() & ((1L << 52) - 1)))
+        }
+      val values = (priced ++ ties ++ tiny ++ edges ++ bits).flatMap(v => Seq(v, -v))
+      val expr = DoubleToScaledLong(BoundReference(0, DoubleType, nullable = false), s)
+      val generated = GenerateUnsafeProjection.generate(Seq(expr))
+      values.foreach { v =>
+        val row = InternalRow(v)
+        if (!java.lang.Double.isNaN(v) && math.abs(v) < maxAbs) {
+          val want = DoubleToScaledLong.viaBigDecimal(v, s)
+          assert(expr.eval(row) == want, s"interpreted, scale $s, v=$v")
+          assert(generated(row).getLong(0) == want, s"generated, scale $s, v=$v")
+        } else {
+          intercept[ArithmeticException](expr.eval(row))
+          intercept[ArithmeticException](generated(row))
+        }
+      }
+    }
   }
 }

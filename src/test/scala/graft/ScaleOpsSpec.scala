@@ -545,7 +545,7 @@ class ScaleOpsSpec extends GraftSuite {
       s"per-round checkpoint blocks leaked: $before persistent RDDs before, $after after")
   }
 
-  test("connectedComponents converges on a 64-node chain (pointer doubling, stale compress)") {
+  test("connectedComponents collapses a 64-node chain to its min id") {
     import graft.operators.Dedup
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val got = Dedup.connectedComponents(chain, "doc_a", "doc_b")
